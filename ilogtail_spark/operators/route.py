@@ -9,11 +9,10 @@ first-match-exclusive.
 
 Spark design: a single pass computes, per row, the ARRAY of matching
 sink names, then ``explode`` fans the row out. That is multicast with
-copy semantics at zero extra scans — the alternative (N filtered
-writes off one cached parent) is provided by the multicast writer in
-sinks/writer.py for the write path. At 100 TB the explode variant is
-one shuffle-free narrow stage; the per-sink write then partitions by
-``sink`` so each sink's files are contiguous.
+copy semantics at zero extra scans. At 100 TB the explode variant is
+one shuffle-free narrow stage; the multicast writer in sinks/writer.py
+then writes it once, partitioned by sink, so each sink's files are
+contiguous.
 """
 
 from __future__ import annotations
@@ -49,26 +48,24 @@ def route_multicast(
     CONDITIONAL route matched, mirroring the reference's default
     aggregator unless DropDisMatch)."""
     conditional = [r for r in routes if r.condition is not None]
-    unconditional = [r for r in routes if r.condition is None]
+    always = [F.lit(r.sink) for r in routes if r.condition is None]
 
-    sinks = F.array(
-        *[F.when(r.condition, F.lit(r.sink)) for r in conditional],
-        *[F.lit(r.sink) for r in unconditional],
-    )
+    # each condition is evaluated once, into a column holding the array
+    # of matching conditional sinks; its size picks the default copy
+    matched_col = "__matched_sinks__"
+    matched = F.col(matched_col)
+    out = df.withColumn(matched_col, F.filter(
+        F.array(*[F.when(r.condition, F.lit(r.sink)) for r in conditional]),
+        lambda x: x.isNotNull(),
+    ))
+    sinks = matched
     if default_sink is not None:
-        matched_any = F.lit(False)
-        for r in conditional:
-            matched_any = matched_any | r.condition
-        sinks = F.when(
-            matched_any, sinks
-        ).otherwise(
-            F.array(
-                *[F.lit(None).cast("string") for _ in conditional],
-                *[F.lit(r.sink) for r in unconditional],
-                F.lit(default_sink),
-            )
+        sinks = F.when(F.size(matched) > 0, matched).otherwise(
+            F.array(F.lit(default_sink))
         )
-    out = df.withColumn(sink_col, F.explode(F.filter(sinks, lambda x: x.isNotNull())))
+    if always:
+        sinks = F.concat(sinks, F.array(*always))
+    out = out.withColumn(sink_col, F.explode(sinks)).drop(matched_col)
     for r in routes:
         if r.discarding_tag:
             for tag in r.discarding_tag:

@@ -54,16 +54,26 @@ def pipeline_from_yaml(src: str):
     tables per the north star) and external-service flushers stay out
     of scope.
 
-    ``src`` is YAML text, or a path to a .yaml file.
+    ``src`` is YAML text, or a path to a .yaml file. A one-line
+    ``src`` ending in ``.yaml``/``.yml`` that does not exist raises
+    ``FileNotFoundError``; a document that is not a mapping raises
+    ``ValueError``.
     """
     import os
 
     import yaml
 
-    if "\n" not in src and os.path.exists(src):
-        with open(src) as f:
-            src = f.read()
+    if "\n" not in src:
+        if os.path.exists(src):
+            with open(src) as f:
+                src = f.read()
+        elif src.endswith((".yaml", ".yml")):
+            raise FileNotFoundError(f"pipeline config not found: {src}")
     cfg = yaml.safe_load(src) or {}
+    if not isinstance(cfg, dict):
+        raise ValueError(
+            f"pipeline config must be a YAML mapping, got {type(cfg).__name__}"
+        )
     if not cfg.get("enable", True):
         return (lambda df: df), list(cfg.get("flushers") or [])
     steps = []
@@ -138,6 +148,12 @@ def standard_routes() -> list[Route]:
     ]
 
 
+def standard_sinks() -> list[str]:
+    """Every sink ``route_stage`` can emit: the routing table's sinks
+    plus the default one."""
+    return [r.sink for r in standard_routes()] + ["default"]
+
+
 def route_stage(df: DataFrame) -> DataFrame:
     return route_multicast(df, standard_routes(), default_sink="default")
 
@@ -177,6 +193,7 @@ __all__ = [
     "enrich_stage",
     "route_stage",
     "standard_routes",
+    "standard_sinks",
     "transcript_pipeline",
     "sink_aggregates",
     "tool_histogram",

@@ -4,21 +4,13 @@ The reference's flusher layer: router fans event groups out to N
 flushers, each with its own batching/serialization
 (core/collection_pipeline/route/Router.cpp:51-85, Batcher.h:131-171).
 
-Spark re-expression — two strategies:
-
-  * ``write_partitioned``: ONE pass — the routed frame (already
-    exploded per sink) writes with ``partitionBy(sink)``; every sink
-    is a hive-partition directory of one parquet dataset. At 100 TB
-    this is the right default: a single scan, a single shuffle-free
-    write, per-sink files contiguous for downstream partition pruning.
-  * ``write_per_sink``: N filtered writes off one persisted upstream —
-    matches the reference's independent-flusher failure isolation
-    (one sink's write failure doesn't poison the others) and lets each
-    sink choose format/layout. Costs one cache materialization.
-
-Iceberg: if a catalog is configured the same frames go through
-``writeTo(...)`` (atomic snapshot commits); the sandbox image lacks
-the Iceberg jars so parquet is the substrate, behind one import-try.
+Spark re-expression: the routed frame (already exploded per sink by
+``route_multicast``) is written in ONE pass with ``partitionBy(sink)``,
+so every sink's rows come from a single scan of the fan-out. Each
+hive-style ``<sink_col>=<sink>`` directory is then published as
+``<out_dir>/<sink>`` with a Hadoop ``FileSystem.rename`` (a metadata
+move, no data copied). The writer does not cache its input: a caller
+that reads the fan-out more than once persists it and owns that cache.
 """
 
 from __future__ import annotations
@@ -29,58 +21,40 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def have_iceberg(spark) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.catalog.Catalog  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
-def write_partitioned(
-    routed: DataFrame,
-    out_dir: str,
-    sink_col: str = "__sink__",
-    mode: str = "overwrite",
-    max_records_per_file: int = 1_000_000,
-) -> None:
-    """One-pass multicast write: partitionBy(sink). maxRecordsPerFile
-    plays the role of the reference's LogGroup size cap
-    (aggregator_base.go 1024-logs/3MB batching) at file granularity."""
-    (
-        routed.withColumn("sink", F.col(sink_col))
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy("sink")
-        .parquet(out_dir)
-    )
-
-
 def write_per_sink(
     routed: DataFrame,
     out_dir: str,
     sinks: list[str],
     sink_col: str = "__sink__",
-    mode: str = "overwrite",
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
 ) -> dict[str, str]:
-    """N filtered writes off one persisted parent. Rows are
+    """Write the rows of each of ``sinks`` to ``out_dir/<sink>`` as
+    parquet without ``sink_col``, replacing ``out_dir``. Rows are
     sortWithinPartitions(conv_id, turn_idx) — the reference's
     aggregator_context per-source ordering guarantee
-    (aggregator_context.go:38-57)."""
-    routed = routed.persist()
-    try:
-        paths = {}
-        for sink in sinks:
-            path = os.path.join(out_dir, sink)
-            (
-                routed.filter(F.col(sink_col) == sink)
-                .drop(sink_col)
-                .sortWithinPartitions(*order_cols)
-                .write.mode(mode)
-                .parquet(path)
-            )
-            paths[sink] = path
-        return paths
-    finally:
-        routed.unpersist()
+    (aggregator_context.go:38-57). Returns ``{sink: path}`` for the
+    sinks that had rows; a sink with none gets no directory."""
+    # leading with sink_col satisfies the partitioned writer's required
+    # ordering, so it adds no sort of its own that could reorder rows
+    (
+        routed.filter(F.col(sink_col).isin(sinks))
+        .sortWithinPartitions(sink_col, *order_cols)
+        .write.mode("overwrite")
+        .partitionBy(sink_col)
+        .parquet(out_dir)
+    )
+    jvm = routed.sparkSession._jvm  # noqa: SLF001
+    fs_path = jvm.org.apache.hadoop.fs.Path
+    root = fs_path(out_dir)
+    fs = root.getFileSystem(routed.sparkSession._jsc.hadoopConfiguration())  # noqa: SLF001
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    paths = {}
+    for sink in sinks:
+        src = fs_path(root, f"{sink_col}={escape(sink)}")
+        if not fs.exists(src):
+            continue
+        dst = fs_path(root, sink)
+        if not fs.rename(src, dst):
+            raise OSError(f"could not publish {src.toString()} as {dst.toString()}")
+        paths[sink] = os.path.join(out_dir, sink)
+    return paths

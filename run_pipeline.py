@@ -45,6 +45,7 @@ def main(argv: list[str] | None = None) -> None:
         parse_stage,
         route_stage,
         sink_aggregates,
+        standard_sinks,
         tool_histogram,
     )
     from ilogtail_spark.sinks.writer import write_per_sink
@@ -103,8 +104,13 @@ def main(argv: list[str] | None = None) -> None:
         )
         routed_summary = result
     else:
+        # one cached fan-out feeds the write and both aggregates
         routed = pipe(df).persist()
-        sinks = [r["__sink__"] for r in routed.select("__sink__").distinct().collect()]
+        if yaml_transform is None:
+            sinks = standard_sinks()
+        else:
+            # a config's routers name their own sinks
+            sinks = [r["__sink__"] for r in routed.select("__sink__").distinct().collect()]
         paths = write_per_sink(routed, os.path.join(args.output, "routed"), sinks)
         routed_summary = {"sinks": sorted(paths)}
 
@@ -120,6 +126,7 @@ def main(argv: list[str] | None = None) -> None:
     metrics.to_df(spark).write.mode("overwrite").parquet(
         os.path.join(args.output, "metrics")
     )
+    routed.unpersist()
 
     print(json.dumps({
         "routed": routed_summary,

@@ -15,8 +15,9 @@ from ilogtail_spark.plans.pipeline import (
     parse_stage,
     route_stage,
     sink_aggregates,
+    standard_sinks,
 )
-from ilogtail_spark.sinks.writer import write_partitioned, write_per_sink
+from ilogtail_spark.sinks.writer import write_per_sink
 from ilogtail_spark.sources.transcripts import (
     GROK_PATTERN,
     ROLE_LOOKUP,
@@ -87,14 +88,13 @@ def test_e2e_routed_set_equality(spark, sf_dir, tmp_path):
 def test_e2e_write_and_order(spark, sf_dir, tmp_path):
     routed = route_stage(enrich_stage(parse_stage(derive_transcripts(spark, sf_dir)), spark))
 
-    # strategy 1: one-pass partitionBy write
-    out1 = str(tmp_path / "partitioned")
-    write_partitioned(routed, out1)
-    back = spark.read.parquet(out1)
-    assert back.count() == routed.count()
-    assert back.select("sink").distinct().count() == routed.select("__sink__").distinct().count()
+    # every sink in one write: all routed rows land, one directory per sink
+    out1 = str(tmp_path / "all_sinks")
+    paths_all = write_per_sink(routed, out1, standard_sinks())
+    assert sum(spark.read.parquet(p).count() for p in paths_all.values()) == routed.count()
+    assert len(paths_all) == routed.select("__sink__").distinct().count()
 
-    # strategy 2: per-sink writes with stable (conv_id, turn_idx) order
+    # a subset of sinks, with stable (conv_id, turn_idx) order
     out2 = str(tmp_path / "per_sink")
     paths = write_per_sink(routed, out2, ["sink_errors", "sink_all"])
     errors = spark.read.parquet(paths["sink_errors"])
@@ -178,6 +178,24 @@ def test_yaml_config_disabled_is_identity(spark):
     transform, _ = pipeline_from_yaml("enable: false\nprocessors:\n  - Type: nope\n")
     df = spark.createDataFrame([(1,)], "x int")
     assert transform(df) is df
+
+
+def test_yaml_config_missing_file_names_path():
+    import pytest
+
+    from ilogtail_spark.plans.pipeline import pipeline_from_yaml
+
+    with pytest.raises(FileNotFoundError, match="no/such/config.yaml"):
+        pipeline_from_yaml("/no/such/config.yaml")
+
+
+def test_yaml_config_not_a_mapping():
+    import pytest
+
+    from ilogtail_spark.plans.pipeline import pipeline_from_yaml
+
+    with pytest.raises(ValueError, match="mapping"):
+        pipeline_from_yaml("- Type: processor_regex\n- Type: processor_json\n")
 
 
 REF_EXAMPLES = "/root/reference/example_config/data_pipelines"
