@@ -1039,7 +1039,7 @@ def _q_dictmap_csv(spark: SparkSession, sf: str) -> DataFrame:
     """processor_dict_map DictFilePath mode
     (processor_dict_map.go:96-135): the lookup loads from a 2-column
     CSV through the registry (MaxDictSize + hash-crash checks), then
-    broadcast-joins as usual."""
+    compiles to the usual literal-map lookup."""
     import os
     import tempfile
 

@@ -47,12 +47,6 @@ def punct_ratio(col: Column) -> Column:
     )
 
 
-def upper_ratio(col: Column) -> Column:
-    return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
-        F.length(F.regexp_replace(col, r"[^A-Z]", "")) / F.length(col)
-    )
-
-
 def stopword_hits(col: Column, words: list[str] | None = None) -> Column:
     """Number of distinct common-stopword types present (word-boundary
     match, case-insensitive)."""

@@ -192,7 +192,8 @@ def compile_strptime_native(fmt: str) -> _Compiled:
         elif s == "p":
             c.add("((?i:AM|PM))", "p")
         elif s in "bBh":
-            c.add(f"((?i:{_MONTH_ALT}))", "bname")
+            # atomic, like find_string: no retry of "Mar" after "March"
+            c.add(f"((?>(?i:{_MONTH_ALT})))", "bname")
         elif s in "aA":
             c.add(f"(?>(?i:{_DAYS}))")
         elif s == "j":

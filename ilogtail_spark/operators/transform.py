@@ -1,10 +1,9 @@
 """Projection / enrichment / scalar transforms (SURVEY.md §2.4).
 
 Everything here is a pure JVM expression plan — no Python in the row
-loop, no shuffle. The one join (dictmap) is an explicit broadcast
-hash join: at 100 TB the fact side streams through map tasks while
-the ≤1000-row lookup rides the broadcast, exactly how the reference
-keeps its dict in memory per worker
+loop, no shuffle. dictmap is a literal-map lookup, no join: the
+≤1000-entry dictionary is a constant of the projection, exactly how
+the reference keeps its dict in memory per worker
 (plugins/processor/dictmap/processor_dict_map.go:96-135).
 """
 
@@ -63,7 +62,7 @@ def pick_fields(
 
 def dict_map(
     df: DataFrame,
-    lookup: DataFrame,
+    mapping: dict,
     source: str,
     dest: str,
     handle_missing: bool = True,
@@ -72,21 +71,29 @@ def dict_map(
 ) -> DataFrame:
     """processor_dict_map (processor_dict_map.go:30-41,96-187).
 
-    Broadcast hash join on the lookup key; Missing default via
-    coalesce. ``fill`` keeps a pre-existing dest column value when
-    present (reference mode DestKey exists + !Override).
+    The dictionary compiles to one literal map that each row looks its
+    key up in, as the Go plugin does with its in-process
+    ``map[string]string``: one projection, no join and no side job.
+    Keys and values are strings (a YAML ``1:`` key matches ``"1"``); a
+    missing or NULL key maps to NULL, then to ``missing`` when
+    ``handle_missing``. ``fill`` keeps a pre-existing dest column value
+    when present (reference mode DestKey exists + !Override).
     """
-    lk, lv = lookup.columns[0], lookup.columns[1]
-    lookup = lookup.withColumnsRenamed({lk: "_dm_key", lv: "_dm_val"})
-    out = df.join(
-        F.broadcast(lookup), on=df[source] == lookup["_dm_key"], how="left"
-    ).drop("_dm_key")
-    mapped = F.col("_dm_val")
+    lut: dict[str, str] = {}
+    for k, v in mapping.items():
+        k, v = str(k), str(v)
+        if lut.setdefault(k, v) != v:
+            raise ValueError(f"dict_map: hash crash on key {k!r}")
+    if not lut:
+        raise ValueError("dict_map: empty mapping")
+    lookup = F.create_map(*[F.lit(x) for kv in lut.items() for x in kv])
+    # try_element_at: a missing key is NULL, never an ANSI error
+    mapped = F.try_element_at(lookup, F.col(source).cast("string"))
     if handle_missing:
         mapped = F.coalesce(mapped, F.lit(missing))
     if mode == "fill" and dest in df.columns:
         mapped = F.coalesce(F.col(dest), mapped)
-    return out.withColumn(dest, mapped).drop("_dm_val")
+    return df.withColumn(dest, mapped)
 
 
 def load_dict_csv(path: str, max_dict_size: int = 1000) -> dict[str, str]:
@@ -94,7 +101,7 @@ def load_dict_csv(path: str, max_dict_size: int = 1000) -> dict[str, str]:
     (processor_dict_map.go:96-135): 2-column CSV, at most
     ``max_dict_size`` entries, duplicate keys with CONFLICTING values
     are a hash-crash error (re-stating the same mapping is fine).
-    Driver-side read — the dict is broadcast-sized by contract."""
+    Driver-side read — the dict becomes a literal map in the plan."""
     import csv
 
     mapping: dict[str, str] = {}
@@ -818,8 +825,7 @@ def as_of_join(
     (the common case: per-tool/per-host config) costs nothing instead
     of funnelling every left row through one window task. Per-key
     version counts ride the broadcast, so this holds while
-    Σ versions fits a broadcast (~10MB-1GB) — exactly the dict_map
-    contract.
+    Σ versions fits a broadcast (~10MB-1GB).
 
     ``union_window`` (large right side): tag and UNION both sides,
     then one window per key ordered by (ts, side) running a
@@ -1347,6 +1353,10 @@ def _encrypt_factory(**cfg):
     convenience leg (raw-bytes key, iv‖ct layout, q35 roundtrip)."""
     params = cfg.get("EncryptionParameters", cfg.get("secret"))
     keys = cfg.get("SourceKeys", cfg.get("keys"))
+    if not keys or not isinstance(keys, (list, tuple)):
+        raise ValueError(
+            f"processor_encrypt: SourceKeys must be a non-empty list, got {keys!r}"
+        )
     if isinstance(params, dict):
         params = dict(params)
         path = params.get("KeyFilePath")
@@ -1364,7 +1374,12 @@ def _encrypt_factory(**cfg):
                         f"processor_encrypt key file {path} is not JSON: {e}"
                     ) from e
         key_hex = params.get("Key", "")
-        iv_hex = params.get("IV") or "0" * 32
+        # absent IV: the zero-IV default; present but empty: parseIV error
+        iv_hex = params.get("IV")
+        if iv_hex is None:
+            iv_hex = "0" * 32
+        elif not iv_hex:
+            raise ValueError("processor_encrypt: IV is empty")
         return lambda df: encrypt_fields_native(
             df, keys, key_hex=key_hex, iv_hex=iv_hex
         )
@@ -1406,8 +1421,7 @@ def _dictmap_factory(**cfg):
     """processor_dict_map (processor_dict_map.go:30-41,96-135): the
     mapping comes from an inline MapDict and/or a DictFilePath CSV
     (CSV entries merge into MapDict with hash-crash checks, capped at
-    MaxDictSize); the lookup DataFrame is built at plan time and
-    broadcast."""
+    MaxDictSize) and compiles to a literal-map lookup."""
     mapping = dict(cfg.get("MapDict", cfg.get("mapping")) or {})
     dict_path = cfg.get("DictFilePath", cfg.get("dict_file_path"))
     max_size = int(cfg.get("MaxDictSize", cfg.get("max_dict_size", 1000)))
@@ -1424,17 +1438,10 @@ def _dictmap_factory(**cfg):
     missing = cfg.get("Missing", cfg.get("missing", "Unknown"))
     mode = cfg.get("Mode", cfg.get("mode", "fill"))
     handle_missing = cfg.get("HandleMissing", cfg.get("handle_missing", True))
-
-    def run(df):
-        lookup = df.sparkSession.createDataFrame(
-            list(mapping.items()), ["_k", "_v"]
-        )
-        return dict_map(
-            df, lookup, source, dest,
-            handle_missing=handle_missing, missing=missing, mode=mode,
-        )
-
-    return run
+    return lambda df: dict_map(
+        df, mapping, source, dest,
+        handle_missing=handle_missing, missing=missing, mode=mode,
+    )
 
 
 @register("processor_geoip")

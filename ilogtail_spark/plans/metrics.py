@@ -10,10 +10,19 @@ batch) the collected observation object.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ilogtail_spark.operators.parse import PARSE_OK_KEY
+
+METRICS_SCHEMA = pa.schema(
+    [
+        ("stage", pa.string()),
+        ("in_events_total", pa.int64()),
+        ("out_failed_events_total", pa.int64()),
+    ]
+)
 
 
 class StageMetrics:
@@ -44,17 +53,9 @@ class StageMetrics:
         return rows
 
     def to_df(self, spark) -> DataFrame:
-        rows = self.collect()
-        if not rows:
-            return spark.createDataFrame(
-                [], "stage string, in_events_total long, out_failed_events_total long"
-            )
-        for r in rows:
-            r.setdefault("out_failed_events_total", None)
+        """The metrics table as a JVM-local relation: an Arrow table
+        becomes a ``LocalRelation``, so writing it runs no Python
+        worker (a row list would become a Python RDD)."""
         return spark.createDataFrame(
-            [
-                (r["stage"], r["in_events_total"], r["out_failed_events_total"])
-                for r in rows
-            ],
-            "stage string, in_events_total long, out_failed_events_total long",
+            pa.Table.from_pylist(self.collect(), schema=METRICS_SCHEMA)
         )

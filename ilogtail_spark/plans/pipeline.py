@@ -5,7 +5,8 @@ This is the Spark re-expression of a reference collection config
 core/config/CollectionConfig.h:35-41) for the BASELINE.json north
 star. Every stage is a pure DataFrame transform; the whole
 pre-shuffle section (parse + enrich + route) fuses into ONE
-whole-stage-codegen map stage — the broadcast join adds no shuffle.
+whole-stage-codegen map stage — enrichment is a literal-map lookup,
+no join.
 
 Also provides the generic config-driven assembler: a list of
 {"type": <reference plugin name>, ...config} dicts composed through
@@ -31,9 +32,9 @@ from ilogtail_spark.operators.transform import dict_map
 from ilogtail_spark.sources.transcripts import (
     GROK_FIELDS,
     GROK_PATTERN,
+    ROLE_LOOKUP,
+    TOOL_LOOKUP,
     derive_transcripts,
-    role_lookup_df,
-    tool_lookup_df,
 )
 
 PARSE_TYPES = {"status": "int", "latency_ms": "int"}
@@ -126,11 +127,11 @@ def parse_stage(df: DataFrame, engine: str = "dissect") -> DataFrame:
 
 
 def enrich_stage(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Broadcast-join dictmap enrichment by role and tool
-    (processor_dict_map semantics, HandleMissing → 'Unknown')."""
-    df = dict_map(df, role_lookup_df(spark), "role", "role_class")
-    df = dict_map(df, tool_lookup_df(spark), "tool", "tool_family")
-    return df
+    """Dictmap enrichment by role and tool (processor_dict_map
+    semantics, HandleMissing → 'Unknown'): two literal-map lookups in
+    one projection. ``spark`` is unused; callers pass their session."""
+    df = dict_map(df, dict(ROLE_LOOKUP), "role", "role_class")
+    return dict_map(df, dict(TOOL_LOOKUP), "tool", "tool_family")
 
 
 def standard_routes() -> list[Route]:

@@ -2,8 +2,6 @@ from ilogtail_spark.sources.tables import load_table, load_tables
 from ilogtail_spark.sources.transcripts import (
     TRANSCRIPTS_CTE,
     derive_transcripts,
-    role_lookup_df,
-    tool_lookup_df,
 )
 
 __all__ = [
@@ -11,6 +9,4 @@ __all__ = [
     "load_tables",
     "derive_transcripts",
     "TRANSCRIPTS_CTE",
-    "role_lookup_df",
-    "tool_lookup_df",
 ]

@@ -306,11 +306,3 @@ TOOL_LOOKUP_SQL = (
     "(VALUES ('bash','shell'),('read','fs'),('write','fs'),('search','net'))"
     " AS tool_lookup(tool, tool_family)"
 )
-
-
-def role_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_LOOKUP, "role string, role_class string")
-
-
-def tool_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_LOOKUP, "tool string, tool_family string")

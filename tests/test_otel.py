@@ -6,13 +6,19 @@ processor_otel_metric_test.go:25-49) — same span/row counts and spot
 values the Go asserts check.
 """
 
+import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from ilogtail_spark.operators.otel import otel_metric_parse, otel_trace_parse
 
 _REF = "/root/reference/plugins/processor/otel"
+
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(_REF), reason=f"needs {_REF}: reference tree absent"
+)
 
 
 def _fixture(fname, var):
@@ -20,6 +26,7 @@ def _fixture(fname, var):
     return re.search(var + r" = `\n(.*?)\n`", src, re.S).group(1)
 
 
+@needs_reference
 def test_trace_reference_fixture(spark):
     doc = _fixture("processor_otel_trace_test.go", "protoJSONData")
     df = spark.createDataFrame([(1, doc)], "id int, otel string")
@@ -48,6 +55,7 @@ def test_trace_reference_fixture(spark):
     assert '"name":"QueryStatus::end()"' in ev[0]["logs"]
 
 
+@needs_reference
 def test_metric_reference_fixture(spark):
     doc = _fixture("processor_otel_metric_test.go", "protoJSONMetricData")
     df = spark.createDataFrame([(1, doc)], "id int, otel string")
@@ -121,6 +129,7 @@ def test_trace_invalid_json_drops(spark):
     assert otel_trace_parse(df, "otel", keep=["id"]).count() == 0
 
 
+@needs_reference
 def test_registry_config_pipeline(spark):
     from ilogtail_spark.operators.registry import OPERATORS
 
@@ -134,6 +143,7 @@ def test_registry_config_pipeline(spark):
     assert mop(mdf).count() == 10
 
 
+@needs_reference
 def test_pb_wire_leg_matches_json_leg_on_go_fixture(spark):
     """Format=protobuf on the reference's own Go-test protojson
     fixtures: json→wire-bytes→decode must yield row-for-row the same

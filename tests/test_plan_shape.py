@@ -2,8 +2,9 @@
 
 These inspect `.explain` output rather than results: predicate
 pushdown reaches the parquet scan, the flagship pre-aggregation path
-is shuffle-free, enrichment is broadcast (never a shuffle join), and
-the dissect parse path contains no java.util.regex expression.
+is shuffle-free, enrichment is a literal-map lookup (no join), the
+CLI path scans no Python RDD, and the dissect parse path contains no
+java.util.regex expression.
 """
 
 from pyspark.sql import functions as F
@@ -40,11 +41,37 @@ def test_flagship_pre_agg_is_shuffle_free(spark, sf_dir):
             assert "REPARTITION" in line, f"unexpected shuffle: {line.strip()}"
 
 
-def test_enrich_is_broadcast_join(spark, sf_dir):
+def test_enrich_has_no_join(spark, sf_dir):
     df = enrich_stage(parse_stage(derive_transcripts(spark, sf_dir)), spark)
     plan = _plan(df)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_cli_plans_scan_no_python_rdd(spark, sf_dir):
+    """A Python-RDD relation (``createDataFrame(<list>)``) shows up as
+    an ``ExistingRDD`` scan and forks Python workers for every action;
+    neither the routed CLI plan nor the metrics table may contain one."""
+    from ilogtail_spark.plans.metrics import StageMetrics
+
+    metrics = StageMetrics()
+    df = metrics.observe_stage(derive_transcripts(spark, sf_dir), "input")
+    df = metrics.observe_stage(parse_stage(df), "parse")
+    routed = route_stage(enrich_stage(df, spark))
+    assert "ExistingRDD" not in _plan(routed)
+
+    routed.count()
+    table = metrics.to_df(spark)
+    assert "ExistingRDD" not in _plan(table)
+    assert table.schema.simpleString() == (
+        "struct<stage:string,in_events_total:bigint,out_failed_events_total:bigint>"
+    )
+    assert sorted(tuple(r) for r in table.collect()) == sorted(
+        (r["stage"], r["in_events_total"], r.get("out_failed_events_total"))
+        for r in metrics.collect()
+    )
+    empty = StageMetrics().to_df(spark)
+    assert empty.schema == table.schema and empty.count() == 0
 
 
 def test_dissect_path_has_no_jvm_regex(spark, sf_dir):

@@ -107,6 +107,14 @@ def test_conv_num_rejections(spark):
         assert row[f"c{i}"]["ok"] is False, f"{inp!r} {fmt!r} should FAIL"
 
 
+def test_month_name_does_not_backtrack(spark):
+    """find_string matches the full name and never retries the
+    abbreviation: '%Bch' on 'March' fails, '%B' on 'March' parses."""
+    row = _eval_structs(spark, [("March", "%Bch"), ("March", "%B")])
+    assert row["c0"]["ok"] is False
+    assert row["c1"]["ok"] is True
+
+
 def test_flexible_width_leaves_rest(spark):
     # conv_num consumes the 2nd digit only when d1*10 <= ulim: "92" for
     # %m parses month 9 leaving "2" to the next literal

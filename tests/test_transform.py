@@ -16,23 +16,20 @@ from ilogtail_spark.operators.transform import (
 )
 
 
-def _lookup(spark):
-    return spark.createDataFrame(
-        [("user", "human"), ("assistant", "model")], "role string, role_class string"
-    )
+_LOOKUP = {"user": "human", "assistant": "model"}
 
 
 def test_dict_map_basic_and_missing(spark):
     df = spark.createDataFrame(
         [(1, "user"), (2, "assistant"), (3, "system")], "id int, role string"
     )
-    out = dict_map(df, _lookup(spark), "role", "role_class").orderBy("id").collect()
+    out = dict_map(df, _LOOKUP, "role", "role_class").orderBy("id").collect()
     assert [r["role_class"] for r in out] == ["human", "model", "Unknown"]
 
 
 def test_dict_map_no_missing_handling(spark):
     df = spark.createDataFrame([(3, "system")], "id int, role string")
-    out = dict_map(df, _lookup(spark), "role", "role_class", handle_missing=False).first()
+    out = dict_map(df, _LOOKUP, "role", "role_class", handle_missing=False).first()
     assert out["role_class"] is None
 
 
@@ -41,16 +38,18 @@ def test_dict_map_fill_vs_overwrite(spark):
         [(1, "user", "preset"), (2, "assistant", None)],
         "id int, role string, role_class string",
     )
-    fill = dict_map(df, _lookup(spark), "role", "role_class", mode="fill").orderBy("id").collect()
+    fill = dict_map(df, _LOOKUP, "role", "role_class", mode="fill").orderBy("id").collect()
     assert [r["role_class"] for r in fill] == ["preset", "model"]
-    over = dict_map(df, _lookup(spark), "role", "role_class", mode="overwrite").orderBy("id").collect()
+    over = dict_map(df, _LOOKUP, "role", "role_class", mode="overwrite").orderBy("id").collect()
     assert [r["role_class"] for r in over] == ["human", "model"]
 
 
-def test_dict_map_is_broadcast(spark):
+def test_dict_map_is_one_projection(spark):
+    """A literal-map lookup: no join, no exchange, no side relation."""
     df = spark.createDataFrame([(1, "user")], "id int, role string")
-    plan = dict_map(df, _lookup(spark), "role", "role_class")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    plan = dict_map(df, _LOOKUP, "role", "role_class")._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan
+    assert plan.count("Scan") == 1
 
 
 def test_add_rename_drop_pick(spark):
@@ -170,6 +169,42 @@ def test_dictmap_csv_factory(spark, tmp_path):
     )
     out = {r["id"]: r["role_class"] for r in fn(df).collect()}
     assert out == {"a": "human", "b": "Unknown"}
+
+
+def test_dictmap_factory_null_source_maps_to_missing(spark):
+    from ilogtail_spark.operators.registry import OPERATORS
+
+    fn = OPERATORS["processor_dict_map"](
+        MapDict={"user": "human"}, SourceKey="role", DestKey="role_class",
+        Missing="none",
+    )
+    df = spark.createDataFrame([("a", "user"), ("b", None)], "id string, role string")
+    out = {r["id"]: r["role_class"] for r in fn(df).collect()}
+    assert out == {"a": "human", "b": "none"}
+
+
+def test_dictmap_factory_yaml_int_key_matches_string(spark):
+    """Go's map[string]string: a YAML ``200: ok`` entry is the string
+    key "200", so it matches a string source value and an int one."""
+    import yaml
+
+    from ilogtail_spark.operators.registry import OPERATORS
+
+    cfg = yaml.safe_load("MapDict:\n  200: ok\n  404: missing\n")
+    assert 200 in cfg["MapDict"]
+    fn = OPERATORS["processor_dict_map"](
+        MapDict=cfg["MapDict"], SourceKey="status", DestKey="status_text"
+    )
+    df = spark.createDataFrame(
+        [(1, "200", 404), (2, "500", 200)], "id int, status string, code int"
+    )
+    out = {r["id"]: r["status_text"] for r in fn(df).collect()}
+    assert out == {1: "ok", 2: "Unknown"}
+    fn = OPERATORS["processor_dict_map"](
+        MapDict=cfg["MapDict"], SourceKey="code", DestKey="code_text"
+    )
+    out = {r["id"]: r["code_text"] for r in fn(df).collect()}
+    assert out == {1: "missing", 2: "ok"}
 
 
 import pytest as _pytest
@@ -380,6 +415,40 @@ def test_encrypt_native_key_file(tmp_path, spark):
             SourceKeys=["source"],
             EncryptionParameters={"KeyFilePath": str(bad)},
         )
+
+
+def test_encrypt_explicit_empty_iv_raises(spark):
+    """Go parseIV: an explicitly empty IV is an Init error; only an
+    absent IV takes the zero-IV default."""
+    import pytest as _pytest
+
+    from ilogtail_spark.operators.registry import OPERATORS
+
+    key_hex = "00112233445566778899aabbccddeeff"
+    with _pytest.raises(ValueError, match="IV is empty"):
+        OPERATORS["processor_encrypt"](
+            SourceKeys=["source"], EncryptionParameters={"Key": key_hex, "IV": ""},
+        )
+    df = spark.createDataFrame([("secret",)], "source string")
+    absent = OPERATORS["processor_encrypt"](
+        SourceKeys=["source"], EncryptionParameters={"Key": key_hex},
+    )
+    zero = OPERATORS["processor_encrypt"](
+        SourceKeys=["source"], EncryptionParameters={"Key": key_hex, "IV": "0" * 32},
+    )
+    assert absent(df).first().source == zero(df).first().source
+
+
+def test_encrypt_missing_source_keys_raises():
+    import pytest as _pytest
+
+    from ilogtail_spark.operators.registry import OPERATORS
+
+    for keys in (None, []):
+        with _pytest.raises(ValueError, match="SourceKeys"):
+            OPERATORS["processor_encrypt"](
+                SourceKeys=keys, EncryptionParameters={"Key": "00" * 16},
+            )
 
 
 def test_drop_last_key_go_include_form(spark):
