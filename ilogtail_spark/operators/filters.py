@@ -280,7 +280,8 @@ def timestamp_filter_native(
     ``source_key`` names a numeric-epoch STRING field interpreted at
     ``precision`` ∈ {second, millisecond, nanosecond} (an invalid
     precision warns and falls back to second upstream — pass the
-    resolved value). A missing key or a non-integer value KEEPS the
+    resolved value); it resolves from a column or the ``attrs`` KV bag.
+    A missing key or a value that is not exactly ``-?[0-9]+`` KEEPS the
     row (ProcessEvent returns true on GetEventTimestamp failure);
     only a successfully parsed timestamp outside [LowerBound,
     UpperBound] (inclusive) is discarded. Second precision compares
@@ -299,10 +300,15 @@ def timestamp_filter_native(
         hi = None if hi is None else hi * 1_000_000
 
     if source_key is not None:
-        if source_key not in df.columns:
+        if source_key not in df.columns and "attrs" not in df.columns:
             return df  # key missing everywhere: every row keeps
-        raw = F.col(source_key).try_cast("long")
-        parsed = F.col(source_key).isNotNull() & raw.isNotNull()
+        from ilogtail_spark.common import resolve_key
+
+        src = resolve_key(df, source_key)
+        # std::from_chars takes only [-]digits: a sign, blank or other
+        # text that try_cast would accept is a parse failure, which keeps
+        raw = F.when(src.rlike(r"^-?[0-9]+\z"), src.try_cast("long"))
+        parsed = raw.isNotNull()
         if p == "millisecond":
             val = raw * F.lit(1_000_000).cast("long")
         else:  # second compares the raw value; nanosecond is raw ns

@@ -484,9 +484,9 @@ def drop_last_key(
     """processor_drop_last_key (processor_drop_last_key.go:26-33,63-79).
 
     EXACT Go form with ``include``: DropKey is nulled on rows where ANY
-    Include key is present (the "parse landed its outputs" witness —
-    test fixtures drop ``src`` when ``src`` or ``test`` exists and keep
-    the row otherwise untouched). Both Include and DropKey are
+    Include key is present, as a column or in the ``attrs`` KV bag (the
+    "parse landed its outputs" witness — test fixtures drop ``src`` when
+    ``src`` or ``test`` exists and keep the row otherwise untouched). Both Include and DropKey are
     mandatory upstream (Init errors on either empty). Without
     ``include``, the repo's parse-contract form nulls the raw column
     where ``ok_col`` says parsing succeeded — the same intent keyed on
@@ -496,10 +496,12 @@ def drop_last_key(
             raise ValueError("Invalid config, DropKey is empty")
         if not include:
             raise ValueError("Invalid config, Include is empty")
+        from ilogtail_spark.common import resolve_key
+
         present = F.lit(False)
         for k in include:
-            if k in df.columns:
-                present = present | F.col(k).isNotNull()
+            if k in df.columns or "attrs" in df.columns:
+                present = present | resolve_key(df, k).isNotNull()
         if raw_key not in df.columns:
             return df
         return df.withColumn(raw_key, F.when(~present, F.col(raw_key)))

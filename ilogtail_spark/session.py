@@ -13,6 +13,34 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_max: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """Half the memory this process may use, rounded down to whole GiB,
+    at least ``1g`` (Spark's own default, also used when ``meminfo``
+    cannot be read). That memory is the host's ``MemTotal``, or the
+    cgroup v2 limit in ``cgroup_max`` when that holds a smaller number:
+    an explicit ``-Xmx`` overrides the JVM's own container-aware sizing.
+    A local-mode driver is the whole engine, but the OS, the page cache
+    the parquet scans go through and the Python driver need the other
+    half."""
+    try:
+        with open(meminfo) as fh:
+            total = 1024 * next(
+                (int(line.split()[1]) for line in fh if line.startswith("MemTotal:")), 0
+            )
+    except OSError:
+        total = 0
+    try:
+        with open(cgroup_max) as fh:
+            limit = fh.read().strip()
+        if limit.isdigit():  # "max" means no limit
+            total = min(total, int(limit))
+    except OSError:
+        pass
+    return f"{max(1, total // (2 << 30))}g"
+
+
 def get_spark(
     app_name: str = "ilogtail_spark",
     cores: int | None = None,
@@ -22,7 +50,9 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     cores=None → local[*]. shuffle_partitions defaults to max(cores, 8)
-    — on a real cluster this would be ~2-3× total executor cores.
+    — on a real cluster this would be ~2-3× total executor cores. The
+    driver heap is ``SPARK_DRIVER_MEM`` when set, else
+    ``default_driver_memory()``.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -41,7 +71,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # throughput collector: on this substrate G1 loses ~25% at

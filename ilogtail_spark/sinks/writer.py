@@ -9,16 +9,21 @@ Spark re-expression: the routed frame (already exploded per sink by
 so every sink's rows come from a single scan of the fan-out. Each
 hive-style ``<sink_col>=<sink>`` directory is then published as
 ``<out_dir>/<sink>`` with a Hadoop ``FileSystem.rename`` (a metadata
-move, no data copied). The writer does not cache its input: a caller
-that reads the fan-out more than once persists it and owns that cache.
+move, no data copied). The writer does not cache its input. A caller
+that needs more from the fan-out than the write reads the published
+directories back with ``read_per_sink`` instead of caching it, so the
+fan-out is computed once, by the write.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ilogtail_spark.operators.transform import dict_map
 
 
 def write_per_sink(
@@ -58,3 +63,29 @@ def write_per_sink(
             raise OSError(f"could not publish {src.toString()} as {dst.toString()}")
         paths[sink] = os.path.join(out_dir, sink)
     return paths
+
+
+def read_per_sink(
+    spark: SparkSession, paths: dict[str, str], schema: StructType
+) -> DataFrame:
+    """Read what ``write_per_sink`` published, ``{sink: path}``, as one
+    frame of ``schema`` plus ``__sink__``. One parquet scan covers every
+    directory, and the explicit schema spares a schema-inference job.
+    Each row's sink comes from its file's directory name, looked up in a
+    literal map (the path is a URI, so the map's keys are URI-encoded
+    too). ``{}`` gives an empty frame of the same schema."""
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    dirs = {
+        hadoop_path(path).toUri().toString().rsplit("/", 1)[-1]: sink
+        for sink, path in paths.items()
+    }
+    df = spark.read.schema(schema).parquet(*paths.values())
+    if not dirs:
+        return df.withColumn("__sink__", F.lit(None).cast("string"))
+    # the parent directory's name, by two substring_index calls: a regex
+    # on every row's path costs about half again as much CPU
+    name = F.substring_index(F.substring_index(F.col("_metadata.file_path"), "/", -2), "/", 1)
+    return dict_map(
+        df.withColumn("__sink__", name), dirs, "__sink__", "__sink__",
+        handle_missing=False, mode="overwrite",
+    )

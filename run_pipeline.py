@@ -48,7 +48,7 @@ def main(argv: list[str] | None = None) -> None:
         standard_sinks,
         tool_histogram,
     )
-    from ilogtail_spark.sinks.writer import write_per_sink
+    from ilogtail_spark.sinks.writer import read_per_sink, write_per_sink
     from ilogtail_spark.sources.transcripts import derive_transcripts
     from ilogtail_spark.session import get_spark
 
@@ -103,15 +103,20 @@ def main(argv: list[str] | None = None) -> None:
             os.path.join(args.output, "routed", "bucket=*")
         )
         routed_summary = result
+    elif yaml_transform is None:
+        # the fan-out is computed once, by the write; the aggregates
+        # read the published sink directories back
+        routed = pipe(df)
+        paths = write_per_sink(routed, os.path.join(args.output, "routed"), standard_sinks())
+        routed = read_per_sink(spark, paths, routed.drop("__sink__").schema)
+        routed_summary = {"sinks": sorted(paths)}
     else:
-        # one cached fan-out feeds the write and both aggregates
+        # a config's routers name their own sinks, found in a pass over
+        # the cached fan-out before the write
         routed = pipe(df).persist()
-        if yaml_transform is None:
-            sinks = standard_sinks()
-        else:
-            # a config's routers name their own sinks
-            sinks = [r["__sink__"] for r in routed.select("__sink__").distinct().collect()]
+        sinks = [r["__sink__"] for r in routed.select("__sink__").distinct().collect()]
         paths = write_per_sink(routed, os.path.join(args.output, "routed"), sinks)
+        routed.unpersist()
         routed_summary = {"sinks": sorted(paths)}
 
     if yaml_transform is None:
@@ -126,7 +131,6 @@ def main(argv: list[str] | None = None) -> None:
     metrics.to_df(spark).write.mode("overwrite").parquet(
         os.path.join(args.output, "metrics")
     )
-    routed.unpersist()
 
     print(json.dumps({
         "routed": routed_summary,

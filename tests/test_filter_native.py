@@ -336,6 +336,36 @@ def test_ts_filter_invalid_and_missing_keep(spark):
     ).count() == 2
 
 
+def test_ts_filter_source_key_in_attrs(spark):
+    """A SourceKey an earlier stage landed in the attrs KV bag is parsed
+    and bounds-checked like a column; a row without it keeps."""
+    from ilogtail_spark.operators.filters import timestamp_filter_native
+
+    df = spark.createDataFrame(
+        [(1, {"t": "1500000000"}), (2, {"t": "2500000000"}), (3, {})],
+        "id int, attrs map<string,string>",
+    )
+    out = timestamp_filter_native(
+        df, source_key="t", lower_bound=1000000000, upper_bound=2000000000
+    )
+    assert sorted(r.id for r in out.collect()) == [1, 3]
+
+
+def test_ts_filter_only_from_chars_integers_parse(spark):
+    """std::from_chars reads only [-]digits: a blank, a '+' or a trailing
+    newline is a parse failure, so the row keeps even out of bounds."""
+    from ilogtail_spark.operators.filters import timestamp_filter_native
+
+    df = spark.createDataFrame(
+        [(" 123",), ("+123",), ("123 ",), ("123\n",), ("-5",), ("123",)],
+        "v string",
+    )
+    out = timestamp_filter_native(
+        df, source_key="v", lower_bound=1000, upper_bound=2000
+    )
+    assert sorted(r.v for r in out.collect()) == [" 123", "+123", "123\n", "123 "]
+
+
 def test_ts_filter_precisions(spark):
     from ilogtail_spark.operators.filters import timestamp_filter_native
 

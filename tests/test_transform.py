@@ -481,3 +481,16 @@ def test_drop_last_key_go_include_form(spark):
         drop_last_key(df2, "", include=["src"])
     with _pytest.raises(ValueError):
         drop_last_key(df2, "src", include=[])
+
+
+def test_drop_last_key_include_in_attrs(spark):
+    """An Include key present only in the attrs KV bag still drops the
+    DropKey; a row without it keeps the DropKey."""
+    from ilogtail_spark.operators.transform import drop_last_key
+
+    df = spark.createDataFrame(
+        [(1, "raw", {"k": "v"}), (2, "raw", {})],
+        "id int, src string, attrs map<string,string>",
+    )
+    out = drop_last_key(df, "src", include=["k"])
+    assert {r.id: r.src for r in out.collect()} == {1: None, 2: "raw"}

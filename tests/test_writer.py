@@ -1,9 +1,11 @@
-"""The multicast writer and the CLI's routed output: one write of the
-cached fan-out, published as one parquet directory per sink, sorted
-by (conv_id, turn_idx) within every file."""
+"""The multicast writer and the CLI's routed output: one uncached write
+of the fan-out, published as one parquet directory per sink, sorted by
+(conv_id, turn_idx) within every file; the CLI's aggregates are read
+back from those directories."""
 
 import glob
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 
@@ -11,14 +13,20 @@ from ilogtail_spark.plans.pipeline import (
     enrich_stage,
     parse_stage,
     route_stage,
+    sink_aggregates,
     standard_sinks,
+    tool_histogram,
 )
-from ilogtail_spark.sinks.writer import write_per_sink
+from ilogtail_spark.sinks.writer import read_per_sink, write_per_sink
 from ilogtail_spark.sources.transcripts import derive_transcripts
 
 
+def _flagship(spark, df):
+    return route_stage(enrich_stage(parse_stage(df), spark))
+
+
 def _routed(spark, sf_dir):
-    return route_stage(enrich_stage(parse_stage(derive_transcripts(spark, sf_dir)), spark))
+    return _flagship(spark, derive_transcripts(spark, sf_dir))
 
 
 def _expected_counts(spark, sf_dir):
@@ -79,3 +87,69 @@ def test_cli_second_run_overwrites(spark, sf_dir, tmp_path):
     run_pipeline.main(["--input", sf_dir, "--output", out])
     assert _written(os.path.join(out, "routed")) == first
     assert not glob.glob(os.path.join(out, "routed", "**", "__sink__=*"), recursive=True)
+
+
+def _sink_keys(df):
+    return Counter(
+        tuple(r) for r in df.select("__sink__", "conv_id", "turn_idx").collect()
+    )
+
+
+def test_read_per_sink_restores_the_routed_rows(spark, sf_dir, tmp_path):
+    routed = _routed(spark, sf_dir)
+    schema = routed.drop("__sink__").schema
+    paths = write_per_sink(routed, str(tmp_path / "routed"), standard_sinks())
+    written = read_per_sink(spark, paths, schema)
+    assert _sink_keys(written) == _sink_keys(routed)
+    empty = read_per_sink(spark, {}, schema)
+    assert empty.columns == written.columns
+    assert empty.count() == 0
+
+
+def _table(path):
+    """A written table's rows (sorted) and its schema; the schema's
+    metadata carries the Spark schema, nullability included."""
+    t = pq.read_table(path)
+    rows = sorted(t.to_pylist(), key=lambda r: [(v is None, str(v)) for v in r.values()])
+    return rows, t.schema
+
+
+def _assert_cli_aggregates(spark, input_df, out, tmp_path):
+    routed = _flagship(spark, input_df)
+    for name, agg in (("sink_aggregates", sink_aggregates), ("tool_histogram", tool_histogram)):
+        want = str(tmp_path / f"want_{name}")
+        agg(routed).write.parquet(want)
+        got_rows, got_schema = _table(os.path.join(out, name))
+        want_rows, want_schema = _table(want)
+        assert got_rows == want_rows, name
+        assert got_schema.equals(want_schema, check_metadata=True), name
+
+
+def test_cli_writes_the_fan_out_uncached(spark, sf_dir, tmp_path, monkeypatch):
+    """The default path computes the fan-out once, in the write, with no
+    cache; its aggregates, read back from the sink directories, equal
+    the aggregates of the routed frame."""
+    import run_pipeline
+
+    def refuse(self, *a, **k):
+        raise AssertionError("the CLI's default path must not cache")
+
+    frame = type(spark.range(1))
+    monkeypatch.setattr(frame, "persist", refuse)
+    monkeypatch.setattr(frame, "cache", refuse)
+    out = str(tmp_path / "out")
+    run_pipeline.main(["--input", sf_dir, "--output", out])
+    _assert_cli_aggregates(spark, derive_transcripts(spark, sf_dir), out, tmp_path)
+
+
+def test_cli_zero_rows_writes_empty_aggregates(spark, sf_dir, tmp_path):
+    import run_pipeline
+
+    empty = str(tmp_path / "empty")
+    derive_transcripts(spark, sf_dir).limit(0).write.parquet(empty)
+    out = str(tmp_path / "out")
+    run_pipeline.main(["--input", empty, "--output", out])
+    assert _written(os.path.join(out, "routed")) == ({}, True)
+    for name in ("sink_aggregates", "tool_histogram"):
+        assert pq.read_table(os.path.join(out, name)).num_rows == 0
+    _assert_cli_aggregates(spark, spark.read.parquet(empty), out, tmp_path)
