@@ -341,8 +341,8 @@ def main() -> None:
             big_sec, big_n = flagship_throughput(spark, sf_dir, replicate=200)
             result["throughput_turns_per_sec_at_20M"] = round(big_n / big_sec, 1)
             result["flagship_20M_sec"] = round(big_sec, 2)
-        except Exception:
-            pass
+        except Exception as exc:
+            result["flagship_20M_error"] = repr(exc)
     # persist the FULL result next to the repo (r4 verdict item 7: the
     # driver keeps only a 2 KB tail of stdout, which loses the
     # per-query table; the committed artifact makes round-over-round

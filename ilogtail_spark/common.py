@@ -6,6 +6,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal. The default parser reads a
+    backslash inside quotes as an escape, so ``\\`` and ``'`` are
+    escaped; every other character (newline, ``$``, non-ASCII) stands
+    for itself."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def md5_hash64(c: Column) -> Column:
     """THE shared cross-engine hash primitive (CLAUDE.md invariants):
     first 15 hex chars of md5 as a signed BIGINT — bit-identical in

@@ -57,6 +57,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ilogtail_spark.common import resolve_key, sql_str
+
 DISCARD_INTERVAL_SEC = 43200  # INT32_FLAG(ilogtail_discard_interval)
 
 _COMPOSITE = {
@@ -222,45 +224,53 @@ def compile_strptime_native(fmt: str) -> _Compiled:
 
 
 _SEP = "\x1e\x1d\x1f"  # parse.py one-pass sentinel
+_EPOCH_RUN = sql_str(r"^\s*([+-]?[0-9]+)")  # strtoll's digit run
+
+# "may" appears in both name lists — dedupe (Spark maps THROW on
+# duplicate keys under the default EXCEPTION policy)
+_MONTH_NUM = {n.lower(): i % 12 + 1 for i, n in enumerate(_MONTHS_FULL + _MONTHS_AB)}
+_MONTH_MAP = "map(" + ", ".join(f"{sql_str(n)}, {v}" for n, v in _MONTH_NUM.items()) + ")"
 
 
-def _nsec_of(digits: Column) -> Column:
+def _nsec_of(digits: str) -> str:
     """conv_nanosecond: digit run scaled by 10^(9−len); first 9 kept."""
-    return F.when(
-        digits.isNotNull() & (digits != ""),
-        F.rpad(F.substring(digits, 1, 9), 9, "0").cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
+    return (
+        f"CASE WHEN {digits} IS NOT NULL AND {digits} != '' "
+        f"THEN CAST(rpad(substring({digits}, 1, 9), 9, '0') AS BIGINT) "
+        "ELSE 0L END"
+    )
 
 
-def _onepass_arr(src: Column, comp: _Compiled) -> Column:
+def _onepass_arr(src: str, comp: _Compiled) -> str:
     """The one-regex-run sentinel extraction array (parse.py:186-198).
     Callers on a DataFrame path MUST land this in its own projection
     (a multi-use non-cheap column is materialized once; the same
     expression inlined per capture re-runs the regex per use)."""
-    ncaps = len(comp.caps)
-    rep = _SEP.join(f"${i + 1}" for i in range(ncaps))
-    return F.when(
-        src.isNotNull() & ~src.contains(_SEP),
-        F.split(
-            F.regexp_replace(src, f"(?:{comp.pattern})[\\s\\S]*", rep),
-            _SEP, -1,
-        ),
+    rep = _SEP.join(f"${i + 1}" for i in range(len(comp.caps)))
+    pat = f"(?:{comp.pattern})" + r"[\s\S]*"
+    sep = sql_str(_SEP)
+    return (
+        f"CASE WHEN {src} IS NOT NULL AND NOT contains({src}, {sep}) THEN "
+        f"split(regexp_replace({src}, {sql_str(pat)}, {sql_str(rep)}), {sep}, -1) "
+        "END"
     )
 
 
 def strptime_native_struct(
-    src: Column,
+    src: str,
     fmt: str,
     source_year: int = -1,
-    now: Column | None = None,
-    arr0: Column | None = None,
-) -> Column:
-    """One codegen expression → struct(ok, sec, nsec).
+    now: str | None = None,
+) -> str:
+    """One codegen expression → struct(ok, sec, nsec), as SQL text over
+    the SQL expression ``src`` (``now``: a timestamp expression, default
+    ``current_timestamp()``).
 
-    ``arr0`` lets a DataFrame caller pass the ``_onepass_arr`` result
-    as a MATERIALIZED column reference; when absent the array expression
-    is inlined — fine for literal probes, an expression-tree blowup on
-    real plans. ``parse_timestamp_native`` stages array → parts struct
+    Every emitter here returns SQL text, so a plan stage costs one
+    ``F.expr`` round trip to the JVM instead of one per node of a
+    ``Column`` tree (about a thousand per format). The regex array is
+    inlined — fine for literal probes, an expression-tree blowup on
+    real plans: ``parse_timestamp_native`` stages array → parts struct
     → tm struct in separate projections and drops rows via a Generate
     (see there); together that took q96 from a 3.2 MB plan / 26 s at
     sf0.01 to 37 KB / ~3 s.
@@ -284,128 +294,110 @@ def strptime_native_struct(
         # skipped whitespace/sign — so '+5' parses sec=5 nsec=5e8.
         # A run past int64 (strtoll saturation) is the one documented
         # deviation: try_cast NULLs it → parse-fail keep.
-        m = F.regexp_extract(src, r"^\s*([+-]?[0-9]+)", 1)
-        n = m.try_cast("long")
-        val_str = n.cast("string")
-        stl = F.least(F.length(val_str), F.lit(10))
-        sec = F.substring(val_str, 1, 10).try_cast("long")
-        ok = src.isNotNull() & n.isNotNull() & (sec != 0)
-        frac = F.regexp_extract(
-            src.substr(stl + 1, F.lit(1 << 30)), r"^([0-9]++)", 1
-        )
-        return F.struct(
-            ok.alias("ok"),
-            F.when(ok, sec).alias("sec"),
-            F.when(ok, _nsec_of(frac)).alias("nsec"),
-        )
+        n = f"try_cast(regexp_extract({src}, {_EPOCH_RUN}, 1) AS BIGINT)"
+        val_str = f"CAST({n} AS STRING)"
+        sec = f"try_cast(substring({val_str}, 1, 10) AS BIGINT)"
+        ok = f"({src} IS NOT NULL AND {n} IS NOT NULL AND {sec} != 0)"
+        frac = (f"regexp_extract(substr({src}, least(length({val_str}), 10) + 1, "
+                f"{1 << 30}), '^([0-9]++)', 1)")
+        return _struct(ok, sec, _nsec_of(frac))
 
     comp = compile_strptime_native(fmt)
     if not comp.ok:
-        return F.struct(
-            F.lit(False).alias("ok"),
-            F.lit(None).cast("long").alias("sec"),
-            F.lit(None).cast("long").alias("nsec"),
-        )
-    ok, vals = _extract_ok_vals(src, comp, arr0)
+        return ("named_struct('ok', false, 'sec', CAST(NULL AS BIGINT), "
+                "'nsec', CAST(NULL AS BIGINT))")
+    ok, vals = _extract_ok_vals(src, comp)
     return _tm_assemble(comp, ok, vals, source_year, now)
 
 
+def _struct(ok: str, sec: str, nsec: str) -> str:
+    return (f"named_struct('ok', {ok}, 'sec', CASE WHEN {ok} THEN {sec} END, "
+            f"'nsec', CASE WHEN {ok} THEN {nsec} END)")
+
+
 def _extract_ok_vals(
-    src: Column, comp: _Compiled, arr0: Column | None = None
-) -> tuple[Column, dict[int, Column]]:
-    """(match flag, {group → captured string}) expressions."""
+    src: str, comp: _Compiled, arr0: str | None = None
+) -> tuple[str, dict[int, str]]:
+    """(match flag, {group → captured string}) SQL expressions."""
     ncaps = len(comp.caps)
+    pat = sql_str(comp.pattern)
+    rl = f"({src} IS NOT NULL AND rlike({src}, {pat}))"
     if ncaps == 0:
-        ok = src.isNotNull() & src.rlike(comp.pattern)
-        vals: dict[int, Column] = {}
-    elif ncaps == 1:
+        return rl, {}
+    if ncaps == 1:
         # a one-group miss passes the source through as ONE part — the
         # same size as a hit — so the sentinel trick needs ≥2 groups
         # (parse.py:88-100); pay the rlike + one extract instead
-        ok = src.isNotNull() & src.rlike(comp.pattern)
-        vals = {1: F.when(ok, F.regexp_extract(src, comp.pattern, 1))}
-    else:
-        arr = arr0 if arr0 is not None else _onepass_arr(src, comp)
-        # the pattern is ^-anchored with no top-level alternation, so a
-        # fired replace yields exactly ncaps parts; a miss passes the
-        # sentinel-free source through as one part (parse.py:88-128)
-        ok = F.when(arr.isNotNull(), F.size(arr) == F.lit(ncaps)).otherwise(
-            src.isNotNull() & src.rlike(comp.pattern)
-        )
-        hit = arr.isNotNull() & (F.size(arr) == F.lit(ncaps))
-        rl = src.isNotNull() & src.rlike(comp.pattern)
-        vals = {
-            i + 1: F.when(hit, F.element_at(arr, i + 1))
-            # sentinel-free MISS: NULL without re-running the pattern
-            .when(arr.isNotNull(), F.lit(None).cast("string"))
-            .otherwise(F.when(rl, F.regexp_extract(src, comp.pattern, i + 1)))
-            for i in range(ncaps)
-        }
+        return rl, {1: f"CASE WHEN {rl} THEN regexp_extract({src}, {pat}, 1) END"}
+    arr = arr0 if arr0 is not None else _onepass_arr(src, comp)
+    # the pattern is ^-anchored with no top-level alternation, so a
+    # fired replace yields exactly ncaps parts; a miss passes the
+    # sentinel-free source through as one part (parse.py:88-128)
+    ok = f"CASE WHEN {arr} IS NOT NULL THEN size({arr}) = {ncaps} ELSE {rl} END"
+    hit = f"{arr} IS NOT NULL AND size({arr}) = {ncaps}"
+    vals = {
+        i: f"CASE WHEN {hit} THEN element_at({arr}, {i}) "
+        # sentinel-free MISS: NULL without re-running the pattern
+        f"WHEN {arr} IS NOT NULL THEN CAST(NULL AS STRING) "
+        f"ELSE CASE WHEN {rl} THEN regexp_extract({src}, {pat}, {i}) END END"
+        for i in range(1, ncaps + 1)
+    }
     return ok, vals
 
 
 def _tm_assemble(
     comp: _Compiled,
-    ok: Column,
-    vals: dict[int, Column],
+    ok: str,
+    vals: dict[int, str],
     source_year: int,
-    now: Column | None,
-) -> Column:
+    now: str | None,
+) -> str:
     # --- assemble tm in token order (overwrite semantics) ------------
-    long_t = "long"
-    tm_year: Column | None = None  # years-since-1900, like struct tm
+    # every compound value is parenthesized: the pieces nest as text
+    tm_year: str | None = None  # years-since-1900, like struct tm
     split_year = False
-    mon: Column | None = None
-    mday: Column | None = None
-    hour: Column = F.lit(0).cast(long_t)
-    minute: Column | None = None
-    secv: Column | None = None
-    frac: Column | None = None
-    range_ok: Column = F.lit(True)
-
-    # "may" appears in both name lists — dedupe (Spark maps THROW on
-    # duplicate keys under the default EXCEPTION policy)
-    month_pairs = {n.lower(): (i % 12) + 1
-                   for i, n in enumerate(_MONTHS_FULL + _MONTHS_AB)}
-    month_map = F.create_map(
-        *[x for n, v in month_pairs.items() for x in (F.lit(n), F.lit(v))]
-    )
+    mon: str | None = None
+    mday: str | None = None
+    hour = "0L"
+    minute: str | None = None
+    secv: str | None = None
+    frac: str | None = None
+    conds = [ok]
 
     for kind, g, llim, ulim in comp.caps:
-        v = vals[g].try_cast(long_t)
+        v = f"try_cast({vals[g]} AS BIGINT)"
         if llim is not None:
-            range_ok = range_ok & v.between(llim, ulim)
+            conds.append(f"({v} >= {llim} AND {v} <= {ulim})")
         if kind == "Y":
-            tm_year = v - 1900
+            tm_year = f"({v} - 1900)"
         elif kind == "y":
             if split_year and tm_year is not None:
-                tm_year = (tm_year - tm_year % 100) + v
+                tm_year = f"(({tm_year} - {tm_year} % 100) + {v})"
             else:
-                tm_year = F.when(v <= 68, v + 100).otherwise(v)
+                tm_year = f"CASE WHEN {v} <= 68 THEN {v} + 100 ELSE {v} END"
             split_year = True
         elif kind == "C":
-            base = v * 100 - 1900
+            base = f"({v} * 100 - 1900)"
             if split_year and tm_year is not None:
-                tm_year = base + tm_year % 100
+                tm_year = f"({base} + {tm_year} % 100)"
             else:
                 tm_year = base
             split_year = True
         elif kind == "m":
             mon = v
         elif kind == "bname":
-            mon = F.element_at(month_map, F.lower(vals[g])).cast(long_t)
+            mon = f"CAST(element_at({_MONTH_MAP}, lower({vals[g]})) AS BIGINT)"
         elif kind == "d":
             mday = v
         elif kind == "H":
             hour = v
         elif kind == "I":
-            hour = F.when(v == 12, F.lit(0).cast(long_t)).otherwise(v)
+            hour = f"CASE WHEN {v} = 12 THEN 0L ELSE {v} END"
         elif kind == "p":
             # %p fails when tm_hour > 11 AT THIS POINT of the walk
-            range_ok = range_ok & (hour <= 11)
-            hour = hour + F.when(
-                F.upper(vals[g]) == "PM", F.lit(12)
-            ).otherwise(F.lit(0)).cast(long_t)
+            conds.append(f"({hour} <= 11)")
+            hour = (f"({hour} + CAST(CASE WHEN upper({vals[g]}) = 'PM' "
+                    "THEN 12 ELSE 0 END AS BIGINT))")
         elif kind == "M":
             minute = v
         elif kind == "S":
@@ -414,53 +406,40 @@ def _tm_assemble(
             frac = vals[g]
         # skipnum / j: range-checked above, value unused by mktime
 
-    ok = ok & range_ok
-
     if tm_year is None:
         if source_year > 0:
-            year = F.lit(source_year).cast(long_t)
+            year = f"{source_year}L"
         elif source_year == 0:
             # DeduceYear (TimeUtil.cpp:93-104) against `now`
-            now_c = (now if now is not None else F.current_timestamp())
-            ny = F.year(now_c).cast(long_t)
-            m_ = mon if mon is not None else F.lit(1).cast(long_t)
-            d_ = mday if mday is not None else F.lit(0).cast(long_t)
+            now_c = now if now is not None else "current_timestamp()"
+            ny = f"CAST(year({now_c}) AS BIGINT)"
+            m_ = mon if mon is not None else "1L"
+            d_ = mday if mday is not None else "0L"
             year = (
-                F.when((m_ == 1) & (d_ == 1)
-                       & (F.month(now_c) == 12) & (F.dayofmonth(now_c) == 31),
-                       ny + 1)
-                .when((m_ == 12) & (d_ == 31)
-                      & (F.month(now_c) == 1) & (F.dayofmonth(now_c) == 1),
-                      ny - 1)
-                .otherwise(ny)
+                f"CASE WHEN {m_} = 1 AND {d_} = 1 AND month({now_c}) = 12 "
+                f"AND dayofmonth({now_c}) = 31 THEN {ny} + 1 "
+                f"WHEN {m_} = 12 AND {d_} = 31 AND month({now_c}) = 1 "
+                f"AND dayofmonth({now_c}) = 1 THEN {ny} - 1 ELSE {ny} END"
             )
         else:
             # tm_year stays INT_MIN → mktime garbage → tv_sec<=0 discard
-            year = F.lit(None).cast(long_t)
+            year = "CAST(NULL AS BIGINT)"
     else:
-        year = tm_year + 1900
+        year = f"({tm_year} + 1900)"
 
-    mon = mon if mon is not None else F.lit(1).cast(long_t)
-    mday = mday if mday is not None else F.lit(0).cast(long_t)  # tm zero-init
-    minute = minute if minute is not None else F.lit(0).cast(long_t)
-    secv = secv if secv is not None else F.lit(0).cast(long_t)
+    mon = mon if mon is not None else "1L"
+    mday = mday if mday is not None else "0L"  # tm zero-init
+    minute = minute if minute is not None else "0L"
+    secv = secv if secv is not None else "0L"
 
     # mktime normalization law: anchor at the 1st of the month, add the
     # (possibly 0 or overflowing) day/time fields as raw offsets
-    first = F.try_make_timestamp(
-        years=year.cast("int"), months=mon.cast("int"), days=F.lit(1),
-        hours=F.lit(0), mins=F.lit(0), secs=F.lit(0).cast("decimal(16,6)"),
-    )
-    sec = (
-        F.unix_timestamp(first)
-        + (mday - 1) * 86400 + hour * 3600 + minute * 60 + secv
-    )
-    nsec = _nsec_of(frac) if frac is not None else F.lit(0).cast(long_t)
-    return F.struct(
-        ok.alias("ok"),
-        F.when(ok, sec).alias("sec"),
-        F.when(ok, nsec).alias("nsec"),
-    )
+    first = (f"try_make_timestamp(CAST({year} AS INT), CAST({mon} AS INT), "
+             "1, 0, 0, CAST(0 AS DECIMAL(16,6)))")
+    sec = (f"(unix_timestamp({first}) + ({mday} - 1) * 86400 + {hour} * 3600 "
+           f"+ {minute} * 60 + {secv})")
+    nsec = _nsec_of(frac) if frac is not None else "0L"
+    return _struct(f"({' AND '.join(conds)})", sec, nsec)
 
 
 def parse_timestamp_native(
@@ -482,7 +461,6 @@ def parse_timestamp_native(
     than ``now − discard_interval`` DROPS the row; success stamps
     ``dest_sec``/``dest_nsec`` with the zone-adjusted time.
     """
-    from ilogtail_spark.common import resolve_key
     from ilogtail_spark.operators.parse import parse_apsara_tz_offset
 
     tz_off = parse_apsara_tz_offset(source_timezone)
@@ -493,6 +471,15 @@ def parse_timestamp_native(
         src = resolve_key(df, source)
     else:
         src = F.lit(None).cast("string")
+    # the source (and a caller's `now`) land in temporary columns the
+    # stage SQL names; each stage below is one F.expr + withColumn
+    d = df.withColumn("_sts", src)
+    tmp = ["_sts", "_st"]
+    now_sql = "current_timestamp()"
+    if now is not None:
+        d = d.withColumn("_stnow", now)
+        now_sql = "_stnow"
+        tmp.append("_stnow")
     # staged projections: the one-pass regex array lands ALONE in its
     # own projection (the parse.py _rxa idiom), the struct in the next,
     # and the keep-filter reads only materialized output columns — so
@@ -500,51 +487,35 @@ def parse_timestamp_native(
     # per capture (inlined, q96's five-variant union optimized for 36 s
     # at sf0.001; staged it is sub-second)
     comp = compile_strptime_native(fmt) if fmt != "%s" else None
-    d = df
-    tmp = ["_st"]
     if comp is None or not comp.ok:
         # %s leg (two small extracts) / always-fail: inline is tiny
-        d = d.withColumn(
-            "_st", strptime_native_struct(src, fmt, source_year=source_year,
-                                          now=now)
-        )
+        st = strptime_native_struct("_sts", fmt, source_year, now_sql)
     else:
         ncaps = len(comp.caps)
         arr0 = None
         if ncaps >= 2:
-            d = d.withColumn("_stna", _onepass_arr(src, comp))
-            arr0 = F.col("_stna")
+            d = d.withColumn("_stna", F.expr(_onepass_arr("_sts", comp)))
+            arr0 = "_stna"
             tmp.append("_stna")
-        ok_e, vals_e = _extract_ok_vals(src, comp, arr0)
-        d = d.withColumn(
-            "_stg",
-            F.struct(
-                ok_e.alias("__ok"),
-                *[vals_e[i + 1].alias(f"g{i}") for i in range(ncaps)],
-            ),
-        )
+        ok_e, vals_e = _extract_ok_vals("_sts", comp, arr0)
+        fields = "".join(f", 'g{i}', {vals_e[i + 1]}" for i in range(ncaps))
+        d = d.withColumn("_stg", F.expr(f"named_struct('__ok', {ok_e}{fields})"))
         tmp.append("_stg")
-        stg = F.col("_stg")
-        d = d.withColumn(
-            "_st",
-            _tm_assemble(
-                comp, stg["__ok"],
-                {i + 1: stg[f"g{i}"] for i in range(ncaps)},
-                source_year, now,
-            ),
+        st = _tm_assemble(
+            comp, "_stg.__ok", {i + 1: f"_stg.g{i}" for i in range(ncaps)},
+            source_year, now_sql,
         )
-    t = F.col("_st")
-    ok = F.coalesce(t["ok"], F.lit(False))
-    adj = t["sec"] - F.lit(tz_off).cast("long")
-    now_c = now if now is not None else F.current_timestamp()
-    now_sec = F.unix_timestamp(now_c.cast("timestamp"))
+    d = d.withColumn("_st", F.expr(st))
+    ok = "coalesce(_st.ok, false)"
+    adj = f"(_st.sec - {tz_off}L)"
     # a parsed event is kept iff its time is positive and fresh; a NULL
     # sec (year-less format / non-calendar date) models mktime's -1 and
     # discards exactly like tv_sec <= 0
-    fresh = adj.isNotNull() & (adj > 0)
+    fresh = f"{adj} IS NOT NULL AND {adj} > 0"
     if discard_old:
-        fresh = fresh & ((now_sec - adj) <= F.lit(int(discard_interval)))
-    keep = ~ok | fresh
+        fresh += (f" AND unix_timestamp(CAST({now_sql} AS TIMESTAMP)) - {adj}"
+                  f" <= {int(discard_interval)}")
+    keep = f"(NOT {ok}) OR ({fresh})"
     # row dropping via explode(when(keep, array(payload))), NOT filter:
     # PushDownPredicates substitutes a Filter's predicate through every
     # deterministic Project down to the scan, re-inlining the staged
@@ -552,24 +523,15 @@ def parse_timestamp_native(
     # 3.2 MB / 36 s at sf0.001). A Generate is not a predicate, so the
     # staged projections survive — while UNRELATED downstream filters
     # (e.g. on a key column) still push through Generate to the scan.
-    d = d.withColumn(
-        "_sto",
-        F.struct(
-            F.when(ok, adj).alias("s"),
-            F.when(ok, t["nsec"]).alias("n"),
-            keep.alias("k"),
-        ),
-    )
-    o = F.col("_sto")
-    d = d.withColumn(
-        "_o",
-        F.explode(
-            F.when(o["k"], F.array(F.struct(o["s"].alias("s"),
-                                            o["n"].alias("n"))))
-        ),
-    )
+    d = d.withColumn("_sto", F.expr(
+        f"named_struct('s', CASE WHEN {ok} THEN {adj} END, "
+        f"'n', CASE WHEN {ok} THEN _st.nsec END, 'k', {keep})"
+    ))
+    d = d.withColumn("_o", F.expr(
+        "explode(CASE WHEN _sto.k THEN array(named_struct('s', _sto.s, 'n', _sto.n)) END)"
+    ))
     return (
-        d.withColumn(dest_sec, F.col("_o")["s"])
-        .withColumn(dest_nsec, F.col("_o")["n"])
+        d.withColumn(dest_sec, F.expr("_o.s"))
+        .withColumn(dest_nsec, F.expr("_o.n"))
         .drop("_o", "_sto", *tmp)
     )

@@ -53,6 +53,17 @@ def get_spark(
     — on a real cluster this would be ~2-3× total executor cores. The
     driver heap is ``SPARK_DRIVER_MEM`` when set, else
     ``default_driver_memory()``.
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is off. When on,
+    PySpark wraps every ``functions.*`` and ``Column`` call in a
+    call-site capture: a conf round trip, a JVM origin set and clear,
+    and a walk of the Python stack. That made building a plan cost two
+    to three times the Py4J round trips (about 2 000 instead of 650 per
+    q96 timestamp format) and only adds the Python call site to
+    analysis-error messages. While debugging, pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+    "true"}``; PySpark reads the setting once per process, at the first
+    wrapped call after a session exists.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -73,6 +84,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # throughput collector: on this substrate G1 loses ~25% at
         # high thread counts on the string-allocation-heavy stages

@@ -79,11 +79,13 @@ def _materialized_path(
     spark: SparkSession, sf_dir: str, replicate: int
 ) -> str | None:
     """Write-once parquet cache of the derived table; atomic via
-    rename. Returns None if the cache dir isn't writable."""
+    rename. Returns None, with a ``RuntimeWarning`` naming the error,
+    if the cache cannot be written."""
     import hashlib
     import os
     import shutil
     import uuid
+    import warnings
 
     root = os.environ.get("ILOGTAIL_SPARK_CACHE", "/tmp/ilogtail_spark_cache")
     # fingerprint the input: abs path + (mtime, size) of every events
@@ -118,8 +120,14 @@ def _materialized_path(
             # lost a concurrent race — someone else materialized it
             shutil.rmtree(tmp, ignore_errors=True)
         return path if os.path.exists(os.path.join(path, "_SUCCESS")) else None
-    except Exception:
+    except Exception as exc:
         shutil.rmtree(tmp, ignore_errors=True)
+        warnings.warn(
+            f"transcripts cache {root!r} not written ({exc!r}); "
+            "falling back to the lazy derivation plan",
+            RuntimeWarning,
+            stacklevel=3,
+        )
         return None
 
 

@@ -110,6 +110,20 @@ def test_e2e_write_and_order(spark, sf_dir, tmp_path):
         assert (a["conv_id"], a["turn_idx"], a["text"]) == (b["conv_id"], b["turn_idx"], b["text"])
 
 
+def test_transcripts_cache_unwritable_warns(spark, sf_dir, tmp_path, monkeypatch):
+    """A transcripts cache that cannot be written is a recorded
+    fallback: the call warns with the error and serves the lazy plan's
+    rows."""
+    blocker = tmp_path / "a_file"
+    blocker.write_text("")
+    monkeypatch.setenv("ILOGTAIL_SPARK_CACHE", str(blocker / "cache"))
+    with pytest.warns(RuntimeWarning, match="falling back to the lazy"):
+        df = derive_transcripts(spark, sf_dir)
+    lazy = derive_transcripts(spark, sf_dir, materialize=False)
+    assert df.count() == lazy.count() > 0
+    assert df.exceptAll(lazy).count() == 0 and lazy.exceptAll(df).count() == 0
+
+
 def test_metrics_observation(spark, sf_dir):
     m = StageMetrics()
     df = parse_stage(derive_transcripts(spark, sf_dir))

@@ -298,3 +298,13 @@ def test_strptime_native_plan_stays_small(spark, sf_dir):
     plan = _plan(df)
     assert len(plan) < 200_000, f"plan blew up to {len(plan)} chars"
     assert "Generate explode" in plan, plan[:2000]
+
+
+def test_apsara_plan_stays_small(spark, sf_dir):
+    """q38 guard, like q96's: the exact Apsara rewrite's plan stays
+    small (about 15 k chars at sf0.001)."""
+    import __spark_entry__ as e
+
+    df = e.queries()["q38_apsara_parse"](spark, sf_dir)
+    plan = _plan(df)
+    assert len(plan) < 60_000, f"plan blew up to {len(plan)} chars"

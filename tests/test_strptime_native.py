@@ -10,9 +10,12 @@ TestCheckTime (the v2 acceptance column over the full specifier set),
 and the ProcessEvent-level keep/drop goldens.
 """
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
+from ilogtail_spark.common import sql_str
 from ilogtail_spark.operators.strptime_native import (
     compile_strptime_native,
     parse_timestamp_native,
@@ -80,10 +83,10 @@ REJECT_CASES = [
 
 def _eval_structs(spark, cases):
     cols = [
-        strptime_native_struct(F.lit(inp), fmt).alias(f"c{i}")
+        f"{strptime_native_struct(sql_str(inp), fmt)} AS c{i}"
         for i, (inp, fmt, *_rest) in enumerate(cases)
     ]
-    return spark.range(1).select(*cols).first()
+    return spark.range(1).selectExpr(*cols).first()
 
 
 def test_parse_log_time_values(spark):
@@ -376,3 +379,68 @@ def test_source_key_resolves_from_attrs(spark):
     got = {r.id: r.log_sec for r in out.collect()}
     assert got[1] == 1704164645
     assert got[2] is None  # key missing in the bag: kept untouched
+
+
+# formats the tests above use beyond the three case tables
+OTHER_FORMATS = [
+    "%Bch", "%B", "%m/%d/%y", "%m%d%y", "%Y-%m-%d %H:%M:%S",
+    "%Y-%m-%d %H:%M:%S.%f", "%H:%M:%S.%f %Y-%m-%d", "%m-%d %H:%M:%S.%f",
+    "%m-%d %H:%M:%S", "%C%y", "%y%C-", "%Q", "ts=%s", "%Y-%m-%d %H:%M:%S %z",
+]
+
+
+def test_sql_str_round_trip(spark):
+    """sql_str quotes any text so Spark's parser reads it back
+    unchanged: the emitter's regexes, sentinel and replacement strings
+    pass through SQL literals."""
+    from ilogtail_spark.operators.strptime_native import _SEP, _Z_OFFSET
+
+    fmts = {f for _inp, f, *_rest in VALUE_CASES + ACCEPT_CASES + REJECT_CASES}
+    texts = [
+        "'", '"', "\\", "\\\\z", "$1", "\n", "\t", "zürich — 東京 ✓",
+        "it\\'s", "a\\", _Z_OFFSET, _SEP,
+        *sorted({compile_strptime_native(f).pattern for f in fmts | set(OTHER_FORMATS)}),
+    ]
+    row = spark.range(1).selectExpr(
+        *[f"{sql_str(s)} AS c{i}" for i, s in enumerate(texts)]
+    ).first()
+    assert list(row) == texts
+
+
+# the distinct (format, SourceTimezone) pairs of q96_strptime_native
+Q96_FORMATS = [
+    ("%Y-%m-%d %H:%M:%S.%f", "GMT+08:00"),
+    ("%d %b %y %H:%M", None),
+    ("%s", None),
+    ("%Y-%m-%d %I:%M:%S %p", None),
+]
+
+
+def test_plan_build_round_trips(spark, monkeypatch):
+    """Building a parse_timestamp_native stage costs a few dozen Py4J
+    round trips: each staged projection is one SQL expression, not a
+    Column tree built call by call (200–670 round trips per format),
+    and get_spark turns off PySpark's per-call origin capture, which
+    tripled them."""
+    from py4j.clientserver import ClientServerConnection
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.range(1).selectExpr("'2024-01-02 03:04:05.6' AS line")
+    # only this thread's commands: py4j's finalizer thread sends the
+    # deletes of proxies freed earlier whenever it gets to them
+    me = threading.get_ident()
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    counts = {}
+    for fmt, tz in Q96_FORMATS:
+        before = len(calls)
+        parse_timestamp_native(df, "line", fmt, source_timezone=tz, discard_old=False)
+        counts[fmt] = len(calls) - before
+    assert all(0 < n <= 60 for n in counts.values()), counts
