@@ -5,11 +5,13 @@ Default mode — driver contract:
     python bench.py
 runs every implemented query from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's core count). The
+full result, per-query table included, goes to ``bench_full.json``;
+the last stdout line is one compact JSON object::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q01_...": sec, ...}, "sf": 0.1,
-     "throughput_turns_per_sec": N, ...}
+     "throughput_turns_per_sec": N, "full": "<path of bench_full.json>",
+     ...any "*_error" keys}
 
 Execution is forced with a ``noop``-format write (full plan runs on
 executors, nothing funnels to the driver), mirroring the reference's
@@ -20,9 +22,9 @@ test/benchmark/.../performance_file_to_blackhole_loongcollectorspl/case.feature:
 Scaling mode — BASELINE.json north-rule evidence:
     python bench.py --scaling [--replicate 100]
 runs the IDENTICAL flagship parse→enrich→route→aggregate job over the
-same (replicated) input at local[8] then local[32] cores — the
-sandbox stand-in for N vs 4N executors — and prints throughput at
-both plus scaling efficiency = (T8/T32)/4.
+same (replicated) input at local[N] then local[4N] cores (``--n-low``,
+default 4) — the sandbox stand-in for N vs 4N executors — and prints
+throughput at both plus scaling efficiency = (T_N/T_4N)/4.
 """
 
 from __future__ import annotations
@@ -306,7 +308,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     if args.scaling:
@@ -343,18 +345,20 @@ def main() -> None:
             result["flagship_20M_sec"] = round(big_sec, 2)
         except Exception as exc:
             result["flagship_20M_error"] = repr(exc)
-    # persist the FULL result next to the repo (r4 verdict item 7: the
-    # driver keeps only a 2 KB tail of stdout, which loses the
-    # per-query table; the committed artifact makes round-over-round
-    # regressions auditable without re-running)
+    # the FULL result, per-query table included, goes next to the repo;
+    # stdout ends with one short line, because a reader that keeps only
+    # the tail of stdout cannot parse a line cut off at its start
+    full = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
+    summary = {k: result[k] for k in ("metric", "value", "unit", "throughput_turns_per_sec")}
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_full.json"), "w") as fh:
+        with open(full, "w") as fh:
             json.dump(result, fh, indent=1, sort_keys=True)
             fh.write("\n")
-    except OSError:
-        pass
-    print(json.dumps(result))
+        summary["full"] = full
+    except OSError as exc:
+        summary["full_error"] = repr(exc)
+    summary.update({k: v for k, v in result.items() if k.endswith("_error")})
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":

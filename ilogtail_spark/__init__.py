@@ -16,4 +16,12 @@ Layout:
   sinks/      multicast writer (parquet substrate; Iceberg if jars present)
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# inside a PySpark Python worker (the Spark driver process never imports pyspark.worker)
+if "pyspark.worker" in _sys.modules:
+    from ilogtail_spark import pyworker
+
+    pyworker.install()

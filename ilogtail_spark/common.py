@@ -14,6 +14,12 @@ def sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a Spark SQL quoted identifier: wrapped in backticks,
+    with each backtick inside doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def md5_hash64(c: Column) -> Column:
     """THE shared cross-engine hash primitive (CLAUDE.md invariants):
     first 15 hex chars of md5 as a signed BIGINT — bit-identical in

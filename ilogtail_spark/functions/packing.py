@@ -86,14 +86,14 @@ def pack_sequences(
     start = F.col("_shard_offset") + F.col("_cum_in") - F.col(tokens_col)
     end = F.col("_shard_offset") + F.col("_cum_in")
     x = x.withColumn("_start", start).withColumn("_end", end)
-    seq_id = F.expr(f"_start DIV {budget}")
+    seq_id = F.expr(f"_start DIV {int(budget)}")
     return (
         x.withColumn("seq_id", seq_id)
         .withColumn("seq_offset", F.pmod(F.col("_start"), F.lit(budget)))
         .withColumn(
             "straddles",
             (F.col(tokens_col) > 0)
-            & (F.expr(f"(_end - 1) DIV {budget}") > seq_id),
+            & (F.expr(f"(_end - 1) DIV {int(budget)}") > seq_id),
         )
         .drop("_shard", "_cum_in", "_shard_offset", "_start", "_end")
     )

@@ -345,6 +345,13 @@ def _extract_ok_vals(
     return ok, vals
 
 
+def _parts_struct(src: str, comp: _Compiled, arr0: str | None) -> str:
+    """The match flag and captures as one struct ``(__ok, g0, g1, …)``."""
+    ok, vals = _extract_ok_vals(src, comp, arr0)
+    fields = "".join(f", 'g{i - 1}', {v}" for i, v in sorted(vals.items()))
+    return f"named_struct('__ok', {ok}{fields})"
+
+
 def _tm_assemble(
     comp: _Compiled,
     ok: str,
@@ -497,9 +504,7 @@ def parse_timestamp_native(
             d = d.withColumn("_stna", F.expr(_onepass_arr("_sts", comp)))
             arr0 = "_stna"
             tmp.append("_stna")
-        ok_e, vals_e = _extract_ok_vals("_sts", comp, arr0)
-        fields = "".join(f", 'g{i}', {vals_e[i + 1]}" for i in range(ncaps))
-        d = d.withColumn("_stg", F.expr(f"named_struct('__ok', {ok_e}{fields})"))
+        d = d.withColumn("_stg", F.expr(_parts_struct("_sts", comp, arr0)))
         tmp.append("_stg")
         st = _tm_assemble(
             comp, "_stg.__ok", {i + 1: f"_stg.g{i}" for i in range(ncaps)},
@@ -507,7 +512,7 @@ def parse_timestamp_native(
         )
     d = d.withColumn("_st", F.expr(st))
     ok = "coalesce(_st.ok, false)"
-    adj = f"(_st.sec - {tz_off}L)"
+    adj = f"(_st.sec - {int(tz_off)}L)"
     # a parsed event is kept iff its time is positive and fresh; a NULL
     # sec (year-less format / non-calendar date) models mktime's -1 and
     # discards exactly like tv_sec <= 0

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ilogtail_spark.common import sql_ident, sql_str
 from ilogtail_spark.operators.registry import cfg_pop, register
 
 
@@ -944,12 +945,13 @@ def log_to_metric(
     metric events — one output row per (input row × value key) with
     (labels, __name__, __value__, ts). stack() keeps it narrow (a
     generator, no shuffle)."""
-    n = len(value_keys)
-    stack_args = ", ".join(f"'{k}', cast(`{k}` as double)" for k in value_keys)
+    stack_args = ", ".join(
+        f"{sql_str(k)}, cast({sql_ident(k)} as double)" for k in value_keys
+    )
     return df.select(
         *label_keys,
         F.col(time_col),
-        F.expr(f"stack({n}, {stack_args}) as (__name__, __value__)"),
+        F.expr(f"stack({len(value_keys)}, {stack_args}) as (__name__, __value__)"),
     ).filter(F.col("__value__").isNotNull())
 
 

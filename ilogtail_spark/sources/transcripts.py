@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ilogtail_spark.sources.tables import load_table
+from ilogtail_spark.sources.tables import files_signature, load_table, read_parquet
 
 # Shared extraction pattern — compatible across Java regex (Spark),
 # RE2 (DuckDB) and Python `re` (pandas-UDF engine + pure-Python oracle).
@@ -67,11 +67,14 @@ def derive_transcripts(
     filter predicate and a 12× slowdown on multi-field queries).
     Values are identical either way; materialize=False keeps the lazy
     plan for plan-shape tests.
+
+    Only the first read of a cache in a process infers its schema
+    (:func:`read_parquet`).
     """
     if materialize:
         path = _materialized_path(spark, sf_dir, replicate)
         if path is not None:
-            return spark.read.parquet(path)
+            return read_parquet(spark, path)
     return _transcripts_plan(spark, sf_dir, replicate)
 
 
@@ -92,18 +95,8 @@ def _materialized_path(
     # parquet part, so a regenerated dataset or a same-basename dir
     # elsewhere never serves a stale cache
     ev_dir = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    sig_parts = [ev_dir]
-    try:
-        entries = (
-            sorted(os.listdir(ev_dir)) if os.path.isdir(ev_dir) else [ev_dir]
-        )
-        for name in entries:
-            p = name if name == ev_dir else os.path.join(ev_dir, name)
-            st = os.stat(p)
-            sig_parts.append(f"{name}:{st.st_mtime_ns}:{st.st_size}")
-    except OSError:
-        pass
-    fp = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:12]
+    sig = files_signature(ev_dir) or ev_dir
+    fp = hashlib.md5(sig.encode()).hexdigest()[:12]
     key = (
         f"transcripts_{os.path.basename(os.path.normpath(sf_dir))}"
         f"_r{replicate}_{fp}"

@@ -11,7 +11,7 @@ embedded YAML configs load through ``pipeline_from_yaml`` unchanged,
 the trigger container's documented output is synthesized as the input
 DataFrame (run.sh / Dockerfile CMD are quoted per case below), and
 the Then-steps dispatch through the steps.go regex table onto
-``ilogtail_spark.plans.verify`` — LogCountAtLeast / LogField /
+``tests/verify.py`` — LogCountAtLeast / LogField /
 LogFieldKV / TagKV / LogContext / LogOrder.
 
 Cases replayed (chosen as the ones whose inputs are fully determined
@@ -31,8 +31,8 @@ import pytest
 import yaml
 from pyspark.sql import functions as F
 
-from ilogtail_spark.plans import verify
 from ilogtail_spark.plans.pipeline import pipeline_from_yaml
+from tests import verify
 
 CASES = "/root/reference/test/e2e/test_cases"
 
