@@ -55,7 +55,8 @@ class StageMetrics:
     def to_df(self, spark) -> DataFrame:
         """The metrics table as a JVM-local relation: an Arrow table
         becomes a ``LocalRelation``, so writing it runs no Python
-        worker (a row list would become a Python RDD)."""
+        worker (a row list would become a Python RDD). One partition,
+        so it is written as one part file by one task."""
         return spark.createDataFrame(
             pa.Table.from_pylist(self.collect(), schema=METRICS_SCHEMA)
-        )
+        ).coalesce(1)

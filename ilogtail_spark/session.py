@@ -10,7 +10,14 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# Hadoop's local filesystem, setting permissions without a forked
+# ``chmod`` per written file; source and build script in ``jvm/``
+LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-localfs.jar")
+LOCAL_FS_CLASS = "ilogtail.spark.fs.NioLocalFileSystem"
 
 
 def default_driver_memory(
@@ -64,6 +71,9 @@ def get_spark(
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
     "true"}``; PySpark reads the setting once per process, at the first
     wrapped call after a session exists.
+
+    ``file://`` paths go through ``LOCAL_FS_CLASS`` (see
+    ``_use_local_fs``).
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -93,9 +103,40 @@ def get_spark(
             os.environ.get("SPARK_GC_OPTS", "-XX:+UseParallelGC"),
         )
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    _use_local_fs(conf)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _use_local_fs(conf: dict[str, str]) -> None:
+    """Point ``spark.hadoop.fs.file.impl`` in ``conf`` at
+    ``LOCAL_FS_CLASS`` when the session about to start can load it.
+
+    A JVM's classpath is fixed when it starts. When the session will
+    launch the JVM, ``LOCAL_FS_JAR`` is appended to
+    ``spark.driver.extraClassPath`` (after a classpath the caller
+    passed). A new session in a JVM that is already running uses the
+    class only when that JVM can load it. An active SparkContext is
+    returned as it is, and under ``spark-submit`` the launcher owns the
+    classpath (``submit.sh`` passes both settings itself): both keep
+    the filesystem they have.
+    """
+    if SparkContext._active_spark_context is not None:
+        return
+    if SparkContext._jvm is None:
+        if "PYSPARK_GATEWAY_PORT" in os.environ:
+            return
+        classpath = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = (
+            f"{classpath}{os.pathsep}{LOCAL_FS_JAR}" if classpath else LOCAL_FS_JAR
+        )
+    else:
+        try:
+            SparkContext._jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
+        except Py4JError:
+            return
+    conf["spark.hadoop.fs.file.impl"] = LOCAL_FS_CLASS

@@ -4,8 +4,13 @@
 #
 #   ./submit.sh --input /root/testdata/sf0.01 --output /tmp/out [...]
 #
-# MASTER defaults to local[32]; on a real cluster set e.g.
-#   MASTER=yarn ./submit.sh ...
+# MASTER defaults to local[$(nproc)] and SHUFFLE_PARTITIONS to
+# max(nproc, 8), as get_spark sizes a local session; on a real cluster
+# set e.g.
+#   MASTER=yarn SHUFFLE_PARTITIONS=64 ./submit.sh ...
+# file:// paths go through ilogtail_spark/jvm/nio-localfs.jar's
+# filesystem, which sets permissions without forking chmod (see
+# ilogtail_spark/session.py).
 set -euo pipefail
 cd "$(dirname "$0")"
 
@@ -21,10 +26,15 @@ with zipfile.ZipFile('$ZIP', 'w') as z:
                 z.write(p, p)
 "
 
+NCORES="$(nproc)"
+JAR="$PWD/ilogtail_spark/jvm/nio-localfs.jar"
 exec spark-submit \
-  --master "${MASTER:-local[32]}" \
-  --conf spark.sql.shuffle.partitions="${SHUFFLE_PARTITIONS:-32}" \
+  --master "${MASTER:-local[$NCORES]}" \
+  --conf spark.sql.shuffle.partitions="${SHUFFLE_PARTITIONS:-$(( NCORES > 8 ? NCORES : 8 ))}" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.session.timeZone=UTC \
+  --driver-class-path "$JAR" \
+  --jars "$JAR" \
+  --conf spark.hadoop.fs.file.impl=ilogtail.spark.fs.NioLocalFileSystem \
   --py-files "$ZIP" \
   run_pipeline.py "$@"

@@ -153,3 +153,26 @@ def test_cli_zero_rows_writes_empty_aggregates(spark, sf_dir, tmp_path):
     for name in ("sink_aggregates", "tool_histogram"):
         assert pq.read_table(os.path.join(out, name)).num_rows == 0
     _assert_cli_aggregates(spark, spark.read.parquet(empty), out, tmp_path)
+
+
+def test_cli_metrics_table_is_one_part_file(spark, sf_dir, tmp_path, capsys):
+    """The metrics table is written by one task as one part file, with
+    the rows, schema and Spark metadata of the uncoalesced table."""
+    import json
+
+    import pyarrow as pa
+    import run_pipeline
+
+    from ilogtail_spark.plans.metrics import METRICS_SCHEMA
+
+    out = str(tmp_path / "out")
+    run_pipeline.main(["--input", sf_dir, "--output", out])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    metrics_dir = os.path.join(out, "metrics")
+    assert len(glob.glob(os.path.join(metrics_dir, "part-*.parquet"))) == 1
+    want = str(tmp_path / "want_metrics")
+    spark.createDataFrame(pa.Table.from_pylist(report["metrics"], schema=METRICS_SCHEMA)).write.parquet(want)
+    got_rows, got_schema = _table(metrics_dir)
+    want_rows, want_schema = _table(want)
+    assert got_rows == want_rows and len(got_rows) == 2
+    assert got_schema.equals(want_schema, check_metadata=True)
