@@ -21,10 +21,12 @@ test/benchmark/.../performance_file_to_blackhole_loongcollectorspl/case.feature:
 
 Scaling mode — BASELINE.json north-rule evidence:
     python bench.py --scaling [--replicate 100]
-runs the IDENTICAL flagship parse→enrich→route→aggregate job over the
-same (replicated) input at local[N] then local[4N] cores (``--n-low``,
-default 4) — the sandbox stand-in for N vs 4N executors — and prints
-throughput at both plus scaling efficiency = (T_N/T_4N)/4.
+runs the IDENTICAL flagship job (the CLI's: parse→enrich→route, the
+routed write, aggregates read back from it) over the same (replicated)
+input at local[N] then local[4N] cores (``--n-low``, default a quarter
+of the host's cores) — the single-host stand-in for N vs 4N executors
+— and prints throughput at both plus scaling efficiency =
+(T_N/T_4N)/4.
 """
 
 from __future__ import annotations
@@ -36,14 +38,10 @@ import sys
 import time
 
 
-def _force(df) -> int:
-    """Execute the full plan executor-side; return row count cheaply.
-
-    noop write materializes every row (no driver collect); the count
-    reuses the cached plan only for reporting, not timing.
-    """
+def _force(df) -> None:
+    """Execute the full plan executor-side: a noop write materializes
+    every row, with no collect to the driver."""
     df.write.format("noop").mode("overwrite").save()
-    return -1
 
 
 def run_queries(sf_dir: str, cores: int) -> tuple[dict, dict]:
@@ -74,24 +72,27 @@ def run_queries(sf_dir: str, cores: int) -> tuple[dict, dict]:
 
 
 def flagship_throughput(spark, sf_dir: str, replicate: int) -> tuple[float, int]:
-    """End-to-end parse→enrich→route→aggregate wall time + turn count."""
-    from ilogtail_spark.plans.pipeline import (
-        sink_aggregates,
-        tool_histogram,
-        transcript_pipeline,
-    )
+    """Wall time and turn count of the CLI's flagship run: the routed
+    fan-out written once, uncached, then the aggregates and metrics
+    table from the written sinks. Its outputs go to a temporary
+    directory, removed afterwards (about 330 bytes per turn)."""
+    import shutil
+    import tempfile
+
+    from ilogtail_spark.plans.metrics import StageMetrics
+    from ilogtail_spark.plans.pipeline import flagship, write_flagship
     from ilogtail_spark.sources.transcripts import derive_transcripts
 
-    n_turns = derive_transcripts(spark, sf_dir, replicate=replicate).count()
-    t0 = time.perf_counter()
-    routed = transcript_pipeline(spark, sf_dir, replicate=replicate).persist()
+    scan = derive_transcripts(spark, sf_dir, replicate=replicate)
+    n_turns = scan.count()
+    out = tempfile.mkdtemp(prefix="bench-flagship-")
     try:
-        _force(routed)
-        _force(sink_aggregates(routed))
-        _force(tool_histogram(routed))
+        t0 = time.perf_counter()
+        metrics = StageMetrics()
+        write_flagship(flagship(scan, metrics), out, metrics)
+        return time.perf_counter() - t0, n_turns
     finally:
-        routed.unpersist()
-    return time.perf_counter() - t0, n_turns
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def scaling_mode(sf_dir: str, replicate: int, n_low: int, runs: int) -> None:
@@ -301,8 +302,8 @@ def main() -> None:
     ap.add_argument("--target-mb", type=int, default=192,
                     help="bytes to push through each --spl-micro workload")
     ap.add_argument("--replicate", type=int, default=100)
-    ap.add_argument("--n-low", type=int, default=4,
-                    help="N for the N-vs-4N pair (default 4 -> local[4] vs local[16])")
+    ap.add_argument("--n-low", type=int, default=max(1, (os.cpu_count() or 1) // 4),
+                    help="N for the N-vs-4N pair (default: a quarter of the host's cores)")
     ap.add_argument("--runs", type=int, default=3,
                     help="measured passes per core count; median reported")
     args = ap.parse_args()

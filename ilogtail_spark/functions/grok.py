@@ -180,10 +180,9 @@ def grok_parse(
     source: str = "text",
     custom_patterns: dict[str, str] | None = None,
     options=None,
-    engine: str = "native",
 ):
     """processor_grok as a DataFrame transform: compile at the driver,
-    execute with parse_regex (JVM) or parse_regex_pandas (Arrow).
+    execute with parse_regex (JVM).
 
     ``pattern`` may be an ORDERED LIST of grok expressions — the
     reference's Match semantics (processor_grok.go:147-192): patterns
@@ -193,7 +192,7 @@ def grok_parse(
     analogue — Catalyst regexes don't backtrack pathologically on the
     anchored idiom set and a stuck task is the cluster's speculative
     -execution concern, not per-row bookkeeping."""
-    from ilogtail_spark.operators.parse import parse_regex, parse_regex_pandas
+    from ilogtail_spark.operators.parse import parse_regex
 
     pats = [pattern] if isinstance(pattern, str) else list(pattern)
     if len(pats) == 1:
@@ -201,10 +200,7 @@ def grok_parse(
         # aliased captures are numbered in order of appearance; nested
         # non-capturing groups don't shift numbering because expansion
         # only emits (?:...) for unaliased refs
-        fn = parse_regex if engine == "native" else parse_regex_pandas
-        return fn(df, regex, fields, source=source, types=types, options=options)
-    if engine != "native":
-        raise ValueError("multi-pattern grok supports the native engine only")
+        return parse_regex(df, regex, fields, source=source, types=types, options=options)
     return _grok_parse_multi(df, pats, source, custom_patterns, options)
 
 

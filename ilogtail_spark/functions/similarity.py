@@ -8,18 +8,15 @@ a cross product.
 
 Dot products run as JVM ``zip_with``/``aggregate`` expressions in
 double precision (left-to-right summation → bit-stable across
-engines); a vectorized pandas-UDF variant exists for wide vectors
-where Arrow+numpy beats codegen'd array loops.
+engines).
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -496,21 +493,3 @@ def semantic_dedup(
         "cos_centroid",
         F.col("_dropped").isNull().alias("kept"),
     )
-
-
-def cosine_pandas_udf():
-    """Vectorized Arrow/numpy cosine for wide vectors — batch matmul
-    beats per-element codegen once dims get large; returned as a
-    (Series, Series) -> Series pandas UDF."""
-
-    @F.pandas_udf(T.DoubleType())
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        A = np.stack(a.to_numpy())
-        B = np.stack(b.to_numpy())
-        num = (A * B).sum(axis=1)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(num / den)
-
-    return cos

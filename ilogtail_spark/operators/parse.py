@@ -15,13 +15,6 @@ All share the reference's CommonParserOptions failure contract
 In the columnar model "fields appear" = columns are non-null; a
 failed row has NULL extracted columns, ``__parse_ok__ = false`` and
 ``__raw_log__`` = the source text.
-
-Two regex engines:
-  * native  — ``rlike`` + ``regexp_extract`` (JVM, whole-stage
-    codegen; the fast path);
-  * pandas  — one vectorized Arrow batch UDF doing a single Python
-    ``re`` pass per row returning every group at once (for dialect
-    features Java regex lacks; never per-row Python).
 """
 
 from __future__ import annotations
@@ -31,7 +24,6 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ilogtail_spark.operators.registry import cfg_pop, register
 
@@ -291,57 +283,6 @@ def parse_regex(
             )
         out = out.drop("_rx_src")
     return out.drop("_rx")
-
-
-def parse_regex_pandas(
-    df: DataFrame,
-    pattern: str,
-    fields: list[str],
-    source: str = "text",
-    types: dict[str, str] | None = None,
-    options: ParserOptions | None = None,
-) -> DataFrame:
-    """Same semantics as :func:`parse_regex`, vectorized pandas engine.
-
-    One Arrow batch UDF does a single compiled-``re`` pass per row and
-    returns a struct of every capture group — the shape the north star
-    mandates for grok dissection when Java regex can't express the
-    dialect (lookbehind variants, \\p classes, regexp2 features used by
-    plugins/processor/grok/processor_grok.go:147-160).
-    """
-    opts = options or ParserOptions()
-    types = types or {}
-    schema = T.StructType(
-        [T.StructField(f, T.StringType()) for f in fields]
-        + [T.StructField("_ok", T.BooleanType())]
-    )
-
-    def make_udf(pat: str, nfields: int):
-        @F.pandas_udf(schema)
-        def extract(s: pd.Series) -> pd.DataFrame:
-            import re
-
-            rx = re.compile(pat)
-            ext = s.str.extract(rx, expand=True)
-            ok = ext.iloc[:, 0].notna() if nfields else s.str.match(rx)
-            ext.columns = list(schema.names[:-1])
-            ext["_ok"] = ok.fillna(False)
-            return ext
-
-        return extract
-
-    udf = make_udf(pattern, len(fields))
-    out = df.withColumn("_parsed", udf(F.col(source)))
-    for name in fields:
-        col = F.col(f"_parsed.{name}")
-        if name in types:
-            col = col.cast(types[name])
-        out = out.withColumn(name, col)
-    out = out.withColumn(
-        "_pok", F.coalesce(F.col("_parsed._ok"), F.lit(False))
-    ).drop("_parsed")
-    out = _apply_failure_contract(out, source, F.col("_pok"), opts)
-    return out.drop("_pok")
 
 
 # ---------------------------------------------------------------------------

@@ -17,8 +17,7 @@ and decode walks tag-by-tag exactly like the reference's ManualPBParser
 
 Scale shape: decoding runs inside ``mapInPandas`` over Arrow record
 batches — one Python call per batch, not per row; parallelism is the
-scan's (zero shuffle).  On a cluster with the spark-protobuf jar the
-same plans swap the UDF for ``from_protobuf`` unchanged.
+scan's (zero shuffle).
 """
 
 from __future__ import annotations
@@ -467,25 +466,9 @@ METRICS_DATA = {1: ("resourceMetrics", "message", True, RESOURCE_METRICS)}
 # Spark operators
 # ---------------------------------------------------------------------------
 
-def _dispatch_jvm(df, codec: str) -> bool:
-    """codec selection shared by the wire operators: 'python' (default
-    — the in-sandbox walker), 'jvm' (spark-protobuf, raises when the
-    jar is absent), 'auto' (jvm when available, else python). The
-    probe runs once at plan-build time."""
-    if codec == "python":
-        return False
-    from ilogtail_spark.operators import pb_jvm
-
-    if codec == "jvm":
-        return True  # pb_jvm raises with guidance if the jar is absent
-    if codec == "auto":
-        return pb_jvm.jvm_available(df.sparkSession)
-    raise ValueError(f"pb codec must be python|jvm|auto, got '{codec}'")
-
-
 def sls_pb_decode(
     df, source_col: str = "pb", keep: list[str] | None = None,
-    drop_invalid: bool = True, codec: str = "python",
+    drop_invalid: bool = True,
 ):
     """Decode a binary SLS ``LogGroup`` column and fan out ONE ROW PER
     LOG (ProcessorParseFromPBNative.cpp:80-176: each raw event parses
@@ -497,16 +480,7 @@ def sls_pb_decode(
     contents map<string,string> (duplicate keys last-wins — dict
     insertion order IS wire order).  Runs as ``mapInPandas`` over Arrow
     batches: one Python call per batch, zero shuffle.
-
-    ``codec='jvm'|'auto'`` swaps in the spark-protobuf leg
-    (pb_jvm.sls_pb_decode_jvm) — identical output schema, zero
-    Python in the plan; see pb_jvm's module docstring.
     """
-    if _dispatch_jvm(df, codec):
-        from ilogtail_spark.operators import pb_jvm
-
-        return pb_jvm.sls_pb_decode_jvm(df, source_col, keep, drop_invalid)
-
     keep = list(keep or [])
     kept_fields = ", ".join(
         f"`{c}` {df.schema[c].dataType.simpleString()}" for c in keep
@@ -572,7 +546,6 @@ def sls_pb_encode_groups(
     source: str = "",
     time_ns_col: str | None = None,
     tags: dict[str, str] | None = None,
-    codec: str = "python",
 ):
     """Encode one SLS ``LogGroup`` per group: logs ordered by
     ``order_col``, each log's Contents from ``content_cols`` (key =
@@ -587,19 +560,7 @@ def sls_pb_encode_groups(
     applyInPandas per group: per-group Python calls cost ~1.4 ms each
     and a 100 TB corpus has billions of groups; the aggregate form
     pays one Python call per Arrow batch of groups.  Per-group state
-    is bounded by the group's log count (conversation length here).
-
-    ``codec='jvm'|'auto'``: same aggregate, to_protobuf serialization
-    (pb_jvm.sls_pb_encode_groups_jvm) — decode-equal output; byte-equal
-    except proto3's omission of an explicit time=0 (pb_jvm docstring)."""
-    if _dispatch_jvm(df, codec):
-        from ilogtail_spark.operators import pb_jvm
-
-        return pb_jvm.sls_pb_encode_groups_jvm(
-            df, group_cols, time_col, content_cols, order_col,
-            topic_col=topic_col, source=source,
-            time_ns_col=time_ns_col, tags=tags,
-        )
+    is bounded by the group's log count (conversation length here)."""
     from pyspark.sql import functions as F
 
     tags = dict(tags or {})
@@ -722,11 +683,8 @@ def _pb_factory(**cfg):
     source = cfg_pop(cfg, "SourceKey", "source", default="pb")
     keep = cfg_pop(cfg, "Keep", "keep", default=None)
     drop_invalid = bool(cfg_pop(cfg, "DropInvalid", default=True))
-    # 'auto' on a cluster with the spark-protobuf jar picks the
-    # zero-Python JVM leg; in-sandbox it resolves to the walker
-    codec = cfg_pop(cfg, "Codec", "codec", default="python")
     return lambda df: sls_pb_decode(
-        df, source, keep=keep, drop_invalid=drop_invalid, codec=codec
+        df, source, keep=keep, drop_invalid=drop_invalid
     )
 
 
@@ -758,7 +716,6 @@ def prom_remote_write_encode(
     value_col: str,
     ts_ms_col: str,
     tag_cols: list[str],
-    codec: str = "python",
 ):
     """Encode one remote-write ``WriteRequest`` per group — the
     flusher_prometheus serializer (utils.go:44-60): per metric row one
@@ -771,17 +728,7 @@ def prom_remote_write_encode(
 
     Same scale shape as sls_pb_encode_groups: ONE hash aggregate then
     a scalar Arrow-batched pandas UDF — one Python call per Arrow
-    batch of groups, never per group.
-
-    ``codec='jvm'|'auto'``: label assembly as array expressions +
-    to_protobuf (pb_jvm.prom_remote_write_encode_jvm) — decoded-set
-    equal; series collation differs (not semantically significant)."""
-    if _dispatch_jvm(df, codec):
-        from ilogtail_spark.operators import pb_jvm
-
-        return pb_jvm.prom_remote_write_encode_jvm(
-            df, group_cols, name_col, value_col, ts_ms_col, tag_cols
-        )
+    batch of groups, never per group."""
     from pyspark.sql import functions as F
 
     tcols = list(tag_cols)

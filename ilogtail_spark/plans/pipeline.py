@@ -8,12 +8,20 @@ pre-shuffle section (parse + enrich + route) fuses into ONE
 whole-stage-codegen map stage — enrichment is a literal-map lookup,
 no join.
 
+One plan serves every caller: ``flagship`` turns a scan into the
+routed fan-out (the CLI, its ``--resume`` buckets, streaming's
+foreachBatch, ``transcript_pipeline`` and bench), and
+``write_flagship`` is the CLI's tail (routed write, read-back,
+aggregates, metrics table).
+
 Also provides the generic config-driven assembler: a list of
 {"type": <reference plugin name>, ...config} dicts composed through
 the operator registry, mirroring YAML pipeline configs.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,10 +33,11 @@ from ilogtail_spark.operators.parse import (
     ParserOptions,
     parse_dissect,
     parse_regex,
-    parse_regex_pandas,
 )
 from ilogtail_spark.operators.route import Route, route_multicast
 from ilogtail_spark.operators.transform import dict_map
+from ilogtail_spark.plans.metrics import StageMetrics
+from ilogtail_spark.sinks.writer import read_per_sink, write_per_sink
 from ilogtail_spark.sources.transcripts import (
     GROK_FIELDS,
     GROK_PATTERN,
@@ -111,16 +120,14 @@ def parse_stage(df: DataFrame, engine: str = "dissect") -> DataFrame:
     status, latency tokens, method/url, error codes. CommonParserOptions
     failure contract (__raw_log__ + __parse_ok__).
 
-    engine: "dissect" (default — the grok pattern compiles to a
-    single-pass structural plan, oracle-identical to the regex and the
-    only parse path that scales past ~8 threads on this substrate),
-    "native" (JVM regexp_extract), or "pandas" (Arrow batch UDF)."""
+    The one flagship engine is dissect: the grok pattern compiles to a
+    single-pass structural plan, oracle-identical to the regex, and
+    ``parse_dissect`` falls back to the regex for a pattern it cannot
+    compile. ``engine="native"`` (the JVM regex) exists only for the
+    benchmark's parse-engine comparison rung; no product caller
+    passes it."""
     opts = ParserOptions(keep_source=True, keep_source_if_fail=True)
-    fn = {
-        "dissect": parse_dissect,
-        "native": parse_regex,
-        "pandas": parse_regex_pandas,
-    }[engine]
+    fn = {"dissect": parse_dissect, "native": parse_regex}[engine]
     return fn(
         df, GROK_PATTERN, GROK_FIELDS, source="text", types=PARSE_TYPES, options=opts
     )
@@ -159,14 +166,59 @@ def route_stage(df: DataFrame) -> DataFrame:
     return route_multicast(df, standard_routes(), default_sink="default")
 
 
-def transcript_pipeline(
-    spark: SparkSession, sf_dir: str, engine: str = "native", replicate: int = 1
+def flagship(
+    df: DataFrame, metrics: StageMetrics | None = None, tag: str = "all"
 ) -> DataFrame:
-    """Full parse → enrich → route plan (one row per (turn, sink))."""
-    df = derive_transcripts(spark, sf_dir, replicate=replicate)
-    df = parse_stage(df, engine=engine)
-    df = enrich_stage(df, spark)
-    return route_stage(df)
+    """Scan → routed fan-out (one row per (turn, sink)): parse → enrich
+    → route. With ``metrics``, the scan is observed as ``input[<tag>]``
+    and the parse as ``parse[<tag>]``; the counters fill in when the
+    frame's first action runs."""
+    if metrics is not None:
+        df = metrics.observe_stage(df, f"input[{tag}]")
+    df = parse_stage(df)
+    if metrics is not None:
+        df = metrics.observe_stage(df, f"parse[{tag}]")
+    return route_stage(enrich_stage(df, df.sparkSession))
+
+
+def transcript_pipeline(
+    spark: SparkSession, sf_dir: str, replicate: int = 1
+) -> DataFrame:
+    """The flagship over the transcripts table of ``sf_dir``."""
+    return flagship(derive_transcripts(spark, sf_dir, replicate=replicate))
+
+
+def write_flagship(routed: DataFrame, out_dir: str, metrics: StageMetrics) -> dict:
+    """The flagship's tail. The routed fan-out is computed once, by its
+    write to ``out_dir/routed/<sink>`` (nothing is cached); the
+    aggregates read the written sinks back. Then ``write_summaries``.
+    Returns ``{"sinks": [...]}``, the sinks that had rows."""
+    spark = routed.sparkSession
+    paths = write_per_sink(routed, os.path.join(out_dir, "routed"), standard_sinks())
+    written = read_per_sink(spark, paths, routed.drop("__sink__").schema)
+    write_summaries(spark, out_dir, metrics, written)
+    return {"sinks": sorted(paths)}
+
+
+def write_summaries(
+    spark: SparkSession,
+    out_dir: str,
+    metrics: StageMetrics,
+    routed: DataFrame | None = None,
+) -> None:
+    """``sink_aggregates`` and ``tool_histogram`` of ``routed`` when it
+    is given (they assume the flagship's parsed columns), then the
+    metrics table, each to its directory under ``out_dir``."""
+    if routed is not None:
+        sink_aggregates(routed).write.mode("overwrite").parquet(
+            os.path.join(out_dir, "sink_aggregates")
+        )
+        tool_histogram(routed).write.mode("overwrite").parquet(
+            os.path.join(out_dir, "tool_histogram")
+        )
+    metrics.to_df(spark).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "metrics")
+    )
 
 
 def sink_aggregates(routed: DataFrame) -> DataFrame:
@@ -195,7 +247,10 @@ __all__ = [
     "route_stage",
     "standard_routes",
     "standard_sinks",
+    "flagship",
     "transcript_pipeline",
+    "write_flagship",
+    "write_summaries",
     "sink_aggregates",
     "tool_histogram",
     "PARSE_OK_KEY",

@@ -19,7 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ilogtail_spark.plans.pipeline import enrich_stage, parse_stage, route_stage
+from ilogtail_spark.plans.pipeline import flagship
 
 
 def streaming_transcripts(
@@ -97,17 +97,14 @@ def build_streaming_query(
     checkpoint_dir: str,
     watermark: str = "1 hour",
     trigger_seconds: int | None = None,
-    engine: str = "native",
 ):
-    """parse → enrich → route inside foreachBatch, with a watermark
-    standing in for processor_timestamp_filter_native's late-data
-    policy."""
+    """The flagship (parse → enrich → route) inside foreachBatch, with
+    a watermark standing in for processor_timestamp_filter_native's
+    late-data policy. ``spark`` is unused; callers pass their
+    session."""
 
     def transform(batch_df: DataFrame) -> DataFrame:
-        routed = route_stage(
-            enrich_stage(parse_stage(batch_df, engine=engine), spark)
-        )
-        return routed.sortWithinPartitions("conv_id", "turn_idx")
+        return flagship(batch_df).sortWithinPartitions("conv_id", "turn_idx")
 
     return _foreach_batch_writer(
         stream, transform, sink_fn, checkpoint_dir, watermark, trigger_seconds

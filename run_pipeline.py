@@ -18,9 +18,9 @@ core/file_server/checkpoint/CheckPointManager.h:40-85).
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import os
-import sys
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -30,8 +30,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--replicate", type=int, default=1)
     ap.add_argument("--resume", action="store_true", help="bucket-wise checkpointed run (idempotent restart)")
     ap.add_argument("--num-buckets", type=int, default=8)
-    ap.add_argument("--engine", choices=["dissect", "native", "pandas"], default="dissect",
-                    help="parse path: structural dissect (scales best), JVM regexp_extract, or vectorized pandas UDF")
     ap.add_argument("--config", default=None,
                     help="reference-style YAML collection config: its processor+aggregator chain REPLACES the built-in parse/enrich stages (inputs ignored, external flushers skipped)")
     args = ap.parse_args(argv)
@@ -40,15 +38,8 @@ def main(argv: list[str] | None = None) -> None:
     # the launcher; get_spark only fills in engine-level SQL conf
     from ilogtail_spark.plans.checkpoint import run_with_checkpoint
     from ilogtail_spark.plans.metrics import StageMetrics
-    from ilogtail_spark.plans.pipeline import (
-        enrich_stage,
-        parse_stage,
-        route_stage,
-        sink_aggregates,
-        standard_sinks,
-        tool_histogram,
-    )
-    from ilogtail_spark.sinks.writer import read_per_sink, write_per_sink
+    from ilogtail_spark.plans.pipeline import flagship, write_flagship, write_summaries
+    from ilogtail_spark.sinks.writer import write_per_sink
     from ilogtail_spark.sources.transcripts import derive_transcripts
     from ilogtail_spark.session import get_spark
 
@@ -60,7 +51,7 @@ def main(argv: list[str] | None = None) -> None:
         df = spark.read.parquet(args.input)
 
     metrics = StageMetrics()
-    bucket_seq = iter(range(1_000_000))
+    routed_dir = os.path.join(args.output, "routed")
 
     yaml_transform = None
     if args.config:
@@ -70,67 +61,48 @@ def main(argv: list[str] | None = None) -> None:
 
         yaml_transform, _flushers = pipeline_from_yaml(args.config)
 
-    def pipe(d):
-        # unique per-invocation stage names: in --resume mode pipe()
-        # runs once per bucket and each Observation must be distinct
-        # or only the last bucket's counters survive
-        tag = f"b{next(bucket_seq)}" if args.resume else "all"
+    def pipe(d, tag):
+        if yaml_transform is None:
+            return flagship(d, metrics, tag)
         d = metrics.observe_stage(d, f"input[{tag}]")
-        if yaml_transform is not None:
-            # reference configs address the raw line under the default
-            # content key (plugin.go DefaultContentKey "content"); the
-            # transcript scan calls it `text`
-            if "content" not in d.columns and "text" in d.columns:
-                d = d.withColumn("content", F.col("text"))
-            d = yaml_transform(d)
-            d = metrics.observe_stage(d, f"config[{tag}]")
-            if "__sink__" not in d.columns:
-                d = d.withColumn("__sink__", F.lit("default"))
-            return d
-        d = parse_stage(d, engine=args.engine)
-        d = metrics.observe_stage(d, f"parse[{tag}]")
-        d = enrich_stage(d, spark)
-        return route_stage(d)
+        # reference configs address the raw line under the default
+        # content key (plugin.go DefaultContentKey "content"); the
+        # transcript scan calls it `text`
+        if "content" not in d.columns and "text" in d.columns:
+            d = d.withColumn("content", F.col("text"))
+        d = yaml_transform(d)
+        d = metrics.observe_stage(d, f"config[{tag}]")
+        if "__sink__" not in d.columns:
+            d = d.withColumn("__sink__", F.lit("default"))
+        return d
 
     if args.resume:
-        result = run_with_checkpoint(
+        # one stage name per bucket: each Observation must be distinct
+        # or only the last bucket's counters survive. Each bucket's
+        # files keep the (conv_id, turn_idx) order of the default path.
+        tags = (f"b{i}" for i in itertools.count())
+        routed_summary = run_with_checkpoint(
             df,
-            os.path.join(args.output, "routed"),
-            pipe,
+            routed_dir,
+            lambda d: pipe(d, next(tags)).sortWithinPartitions("conv_id", "turn_idx"),
             num_buckets=args.num_buckets,
         )
-        routed = spark.read.parquet(
-            os.path.join(args.output, "routed", "bucket=*")
-        )
-        routed_summary = result
+        routed = None
+        if yaml_transform is None:
+            routed = spark.read.parquet(os.path.join(routed_dir, "bucket=*"))
+        write_summaries(spark, args.output, metrics, routed)
     elif yaml_transform is None:
-        # the fan-out is computed once, by the write; the aggregates
-        # read the published sink directories back
-        routed = pipe(df)
-        paths = write_per_sink(routed, os.path.join(args.output, "routed"), standard_sinks())
-        routed = read_per_sink(spark, paths, routed.drop("__sink__").schema)
-        routed_summary = {"sinks": sorted(paths)}
+        routed_summary = write_flagship(pipe(df, "all"), args.output, metrics)
     else:
         # a config's routers name their own sinks, found in a pass over
-        # the cached fan-out before the write
-        routed = pipe(df).persist()
+        # the cached fan-out before the write; a config defines its own
+        # output shape, so only the metrics table follows
+        routed = pipe(df, "all").persist()
         sinks = [r["__sink__"] for r in routed.select("__sink__").distinct().collect()]
-        paths = write_per_sink(routed, os.path.join(args.output, "routed"), sinks)
+        paths = write_per_sink(routed, routed_dir, sinks)
         routed.unpersist()
         routed_summary = {"sinks": sorted(paths)}
-
-    if yaml_transform is None:
-        # the built-in pipeline's summary tables assume its parsed
-        # columns; a YAML config defines its own output shape
-        sink_aggregates(routed).write.mode("overwrite").parquet(
-            os.path.join(args.output, "sink_aggregates")
-        )
-        tool_histogram(routed).write.mode("overwrite").parquet(
-            os.path.join(args.output, "tool_histogram")
-        )
-    metrics.to_df(spark).write.mode("overwrite").parquet(
-        os.path.join(args.output, "metrics")
-    )
+        write_summaries(spark, args.output, metrics)
 
     print(json.dumps({
         "routed": routed_summary,

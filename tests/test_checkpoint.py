@@ -38,8 +38,8 @@ def test_kill_and_resume_no_duplicates(spark, sf_dir, tmp_path):
 
 
 def test_bucketed_input_is_partition_pruned(spark, tmp_path):
-    """materialize_input writes the input once partitioned by bucket;
-    each per-bucket read must prune to its own directory instead of
+    """The input is written once partitioned by bucket; each
+    per-bucket read must prune to its own directory instead of
     re-scanning everything (was num_buckets full scans)."""
     import os
 

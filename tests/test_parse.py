@@ -14,7 +14,6 @@ from ilogtail_spark.operators.parse import (
     parse_json,
     parse_kv,
     parse_regex,
-    parse_regex_pandas,
     parse_timestamp,
 )
 
@@ -56,18 +55,6 @@ def test_regex_types(spark):
     df = _df(spark, ["alpha status=200"])
     out = parse_regex(df, PAT, FIELDS, types={"code": "int"}).first()
     assert out["code"] == 200
-
-
-def test_pandas_engine_matches_native(spark):
-    texts = ["alpha status=200", "nope", None, "beta status=404 tail"]
-    df = _df(spark, texts)
-    a = parse_regex(df, PAT, FIELDS).orderBy("id").collect()
-    b = parse_regex_pandas(df, PAT, FIELDS).orderBy("id").collect()
-    for ra, rb in zip(a, b):
-        assert ra["name"] == rb["name"]
-        assert ra["code"] == rb["code"]
-        assert ra[PARSE_OK_KEY] == rb[PARSE_OK_KEY]
-        assert ra[RAW_LOG_KEY] == rb[RAW_LOG_KEY]
 
 
 def test_parse_json(spark):

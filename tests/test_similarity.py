@@ -6,7 +6,6 @@ from ilogtail_spark.functions.similarity import (
     ann_lsh_topk,
     brute_force_topk,
     cosine,
-    cosine_pandas_udf,
     embedding_neardup_pairs,
     lsh_sign_bucket,
 )
@@ -52,19 +51,6 @@ def test_ann_lsh_contains_near_dup(spark):
 def test_embedding_neardup_pairs(spark):
     out = embedding_neardup_pairs(_vecs(spark), threshold=0.99, num_planes=4).collect()
     assert {(r["id_a"], r["id_b"]) for r in out} == {(0, 1)}
-
-
-def test_pandas_cosine_matches_native(spark):
-    df = _vecs(spark).select(
-        F.col("embedding").alias("a"), F.reverse(F.col("embedding")).alias("b")
-    )
-    cos_udf = cosine_pandas_udf()
-    rows = df.select(
-        F.round(cosine(F.col("a"), F.col("b")), 6).alias("native"),
-        F.round(cos_udf(F.col("a"), F.col("b")), 6).alias("pandas"),
-    ).collect()
-    for r in rows:
-        assert math.isclose(r["native"], r["pandas"], abs_tol=1e-6)
 
 
 def test_ivf_full_probe_equals_brute_force(spark, sf_dir):

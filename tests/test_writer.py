@@ -176,3 +176,46 @@ def test_cli_metrics_table_is_one_part_file(spark, sf_dir, tmp_path, capsys):
     want_rows, want_schema = _table(want)
     assert got_rows == want_rows and len(got_rows) == 2
     assert got_schema.equals(want_schema, check_metadata=True)
+
+
+def _keys_by_sink(table):
+    """{sink: [(conv_id, turn_idx), ...]} in file order."""
+    keys = {}
+    for sink, conv, turn in zip(
+        table["__sink__"].to_pylist(), table["conv_id"].to_pylist(), table["turn_idx"].to_pylist()
+    ):
+        keys.setdefault(sink, []).append((conv, turn))
+    return keys
+
+
+def test_cli_resume_matches_the_default_path(spark, sf_dir, tmp_path):
+    """``--resume`` writes each bucket's files in (conv_id, turn_idx)
+    order within every sink, the same routed rows as the default path,
+    and the same aggregates."""
+    import run_pipeline
+
+    default, resumed = str(tmp_path / "default"), str(tmp_path / "resumed")
+    run_pipeline.main(["--input", sf_dir, "--output", default])
+    run_pipeline.main(["--input", sf_dir, "--output", resumed, "--resume", "--num-buckets", "3"])
+
+    parts = glob.glob(os.path.join(resumed, "routed", "bucket=*", "*.parquet"))
+    assert parts
+    resumed_keys = Counter()
+    for part in parts:
+        by_sink = _keys_by_sink(pq.read_table(part, columns=["__sink__", "conv_id", "turn_idx"]))
+        for sink, keys in by_sink.items():
+            assert keys == sorted(keys), (part, sink)
+            resumed_keys.update((sink, *k) for k in keys)
+
+    routed_dir = os.path.join(default, "routed")
+    assert _written(routed_dir)[1]
+    default_keys = Counter()
+    for sink in os.listdir(routed_dir):
+        if not os.path.isdir(os.path.join(routed_dir, sink)):
+            continue
+        t = pq.read_table(os.path.join(routed_dir, sink), columns=["conv_id", "turn_idx"])
+        default_keys.update(zip([sink] * t.num_rows, t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+    assert resumed_keys == default_keys
+
+    for name in ("sink_aggregates", "tool_histogram"):
+        assert _table(os.path.join(resumed, name))[0] == _table(os.path.join(default, name))[0], name
