@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
-# Build nio-localfs.jar from NioLocalFileSystem.java against the Hadoop
-# classes bundled with pyspark. The output is reproducible: class files
-# for Java 17, fixed entry dates, no manifest.
+# Build ilogtail-jvm.jar, the JVM side of ilogtail_spark (the file://
+# filesystem and the SLS LogGroup codec), from every .java file in this
+# directory against the Spark and Hadoop classes bundled with pyspark.
+# The output is reproducible: class files for Java 17, fixed entry dates,
+# no manifest.
 #
 #   ilogtail_spark/jvm/build.sh [OUT_DIR]    # default: this directory
 set -euo pipefail
@@ -10,6 +12,6 @@ OUT="$(cd "${1:-$HERE}" && pwd)"
 JARS="$(python -c 'import os, pyspark; print(os.path.join(os.path.dirname(pyspark.__file__), "jars"))')"
 CLASSES="$(mktemp -d)"
 trap 'rm -rf "$CLASSES"' EXIT
-javac --release 17 -nowarn -cp "$JARS/*" -d "$CLASSES" "$HERE/NioLocalFileSystem.java"
-rm -f "$OUT/nio-localfs.jar"
-jar --create --no-manifest --date=2026-01-01T00:00:00Z --file "$OUT/nio-localfs.jar" -C "$CLASSES" .
+javac --release 17 -nowarn -cp "$JARS/*" -d "$CLASSES" "$HERE"/*.java
+rm -f "$OUT/ilogtail-jvm.jar"
+jar --create --no-manifest --date=2026-01-01T00:00:00Z --file "$OUT/ilogtail-jvm.jar" -C "$CLASSES" .

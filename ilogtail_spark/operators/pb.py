@@ -15,9 +15,10 @@ descriptor is a plain dict ``{field_no: (name, kind, repeated, sub)}``
 and decode walks tag-by-tag exactly like the reference's ManualPBParser
 (switch on field number, validate wire type, skip unknown fields).
 
-Scale shape: decoding runs inside ``mapInPandas`` over Arrow record
-batches — one Python call per batch, not per row; parallelism is the
-scan's (zero shuffle).
+Scale shape: the OTLP and prom legs run as Arrow-batched pandas UDFs,
+one Python call per batch, not per row; the SLS LogGroup legs run in
+the JVM (``sls_pb_decode``/``sls_pb_encode_groups``). Parallelism is
+the scan's (zero shuffle).
 """
 
 from __future__ import annotations
@@ -25,9 +26,19 @@ from __future__ import annotations
 import base64
 import json
 import struct
-from typing import Any, Iterator
+from typing import Any
 
 import pandas as pd
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ilogtail_spark.operators.registry import cfg_pop, register
 
@@ -466,6 +477,52 @@ METRICS_DATA = {1: ("resourceMetrics", "message", True, RESOURCE_METRICS)}
 # Spark operators
 # ---------------------------------------------------------------------------
 
+# The SLS LogGroup legs run in the JVM: ``jvm/SlsLogGroup.java`` is this
+# module's codec restricted to LOG_GROUP, as Java UDFs, so neither
+# operator forks a Python worker. decode_message/encode_message above
+# stay the codec of OTLP and prom and the twin the tests hold it to.
+_CODEC_CLASS = "ilogtail.spark.pb.SlsLogGroup"
+_STR = StringType()
+# one decoded Log: sls_pb_decode's columns after the kept ones
+_DECODED = StructType([
+    StructField(name, dtype) for name, dtype in (
+        ("topic", _STR), ("source", _STR), ("category", _STR), ("machine_uuid", _STR),
+        ("tags", MapType(_STR, _STR)), ("log_time", LongType()), ("time_ns", LongType()),
+        ("contents", MapType(_STR, _STR)),
+    )
+])
+# drop_invalid -> (session function, class, return type)
+_DECODE_UDFS = {
+    True: ("ilogtail_sls_pb_decode", "Decode", ArrayType(_DECODED)),
+    False: (
+        "ilogtail_sls_pb_decode_keep_invalid", "DecodeKeepInvalid",
+        ArrayType(StructType(_DECODED.fields + [StructField("_pb_ok", BooleanType())])),
+    ),
+}
+
+
+def _codec_udf(spark, name: str, cls: str, return_type: ArrayType | BinaryType) -> str:
+    """Register ``_CODEC_CLASS$cls`` as the session function ``name``
+    and return the name; raise naming the jar when the JVM cannot load
+    the class (a session started without ``session.JVM_JAR``)."""
+    from pyspark.errors import AnalysisException
+    from py4j.protocol import Py4JError
+
+    from ilogtail_spark.session import JVM_JAR
+
+    try:
+        spark.udf.registerJavaFunction(name, f"{_CODEC_CLASS}${cls}", return_type)
+    except (AnalysisException, Py4JError) as err:
+        if _CODEC_CLASS not in str(err):
+            raise
+        raise RuntimeError(
+            f"the SLS LogGroup codec ({_CODEC_CLASS}) is not on this JVM's "
+            f"classpath; start the session with get_spark() or put {JVM_JAR} "
+            "on spark.driver.extraClassPath (and --jars on a cluster)"
+        ) from err
+    return name
+
+
 def sls_pb_decode(
     df, source_col: str = "pb", keep: list[str] | None = None,
     drop_invalid: bool = True,
@@ -477,63 +534,22 @@ def sls_pb_decode(
 
     Output: keep..., topic, source, category, machine_uuid,
     tags map<string,string>, log_time long, time_ns long,
-    contents map<string,string> (duplicate keys last-wins — dict
-    insertion order IS wire order).  Runs as ``mapInPandas`` over Arrow
-    batches: one Python call per batch, zero shuffle.
+    contents map<string,string> (duplicate keys last-wins at the first
+    key's position), every field nullable. One projection: ``inline``
+    of the JVM decode UDF (``jvm/SlsLogGroup.java``), called once per
+    payload, zero shuffle.
     """
+    from pyspark.sql import functions as F
+
     keep = list(keep or [])
-    kept_fields = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in keep
-    )
-    schema = (
-        (kept_fields + ", " if kept_fields else "")
-        + "topic string, source string, category string, machine_uuid string, "
-        + "tags map<string,string>, log_time bigint, time_ns bigint, "
-        + "contents map<string,string>"
-        + ("" if drop_invalid else ", _pb_ok boolean")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = keep + [
-            "topic", "source", "category", "machine_uuid", "tags",
-            "log_time", "time_ns", "contents",
-        ] + ([] if drop_invalid else ["_pb_ok"])
-        for pdf in batches:
-            rows = []
-            # zip over column arrays, not iterrows (iterrows builds a
-            # Series per row — ~50x slower on wide batches)
-            kept_iters = [pdf[c].tolist() for c in keep]
-            for raw, *kept in zip(pdf[source_col].tolist(), *kept_iters):
-                try:
-                    g = decode_message(bytes(raw), LOG_GROUP)
-                    ok = True
-                except Exception:
-                    g, ok = {}, False
-                if not ok and drop_invalid:
-                    continue
-                base = dict(zip(keep, kept))
-                base.update(
-                    topic=g.get("topic", ""),
-                    source=g.get("source", ""),
-                    category=g.get("category", ""),
-                    machine_uuid=g.get("machineUuid", ""),
-                    tags={t.get("key", ""): t.get("value", "")
-                          for t in g.get("logTags", [])},
-                )
-                if not drop_invalid:
-                    base["_pb_ok"] = ok
-                for log in g.get("logs", []) or ([{}] if not ok else []):
-                    row = dict(base)
-                    row["log_time"] = log.get("time")
-                    row["time_ns"] = log.get("timeNs")
-                    row["contents"] = {
-                        c.get("key", ""): c.get("value", "")
-                        for c in log.get("contents", [])
-                    }
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(gen, schema=schema)
+    fn = _codec_udf(df.sparkSession, *_DECODE_UDFS[drop_invalid])
+    # every output column is nullable, kept ones included (a CASE with
+    # no ELSE; the optimizer folds it away for a non-nullable column)
+    kept = [
+        F.col(c) if df.schema[c].nullable else F.when(F.col(c).isNotNull(), F.col(c)).alias(c)
+        for c in keep
+    ]
+    return df.select(*kept, F.inline(F.call_function(fn, F.col(source_col))))
 
 
 def sls_pb_encode_groups(
@@ -556,22 +572,21 @@ def sls_pb_encode_groups(
 
     Shape: ONE hash aggregate (sort_array ∘ collect_list of the per-log
     struct, order key leading so the array sort IS the log order) then
-    a scalar Arrow-batched pandas UDF over the aggregated rows — NOT
-    applyInPandas per group: per-group Python calls cost ~1.4 ms each
-    and a 100 TB corpus has billions of groups; the aggregate form
-    pays one Python call per Arrow batch of groups.  Per-group state
-    is bounded by the group's log count (conversation length here)."""
+    the JVM encode UDF (``jvm/SlsLogGroup.java``), once per group.
+    Per-group state is bounded by the group's log count (conversation
+    length here). A NULL time is written as 0 and a NULL content value
+    as ""; a NULL topic is omitted, and a NULL time_ns or one outside
+    uint32 too. ``source`` and ``tags`` are the same for every group:
+    they are encoded here once, as the bytes that follow the topic."""
     from pyspark.sql import functions as F
 
-    tags = dict(tags or {})
-    taglist = [{"key": k, "value": v} for k, v in tags.items()]
-    has_ns = time_ns_col is not None
+    taglist = [{"key": k, "value": v} for k, v in (tags or {}).items()]
+    tail = encode_message({"source": source, "logTags": taglist}, LOG_GROUP)
     struct_fields = [
         F.col(order_col).alias("_o"),
         F.col(time_col).cast("long").alias("_t"),
-    ] + ([F.col(time_ns_col).cast("long").alias("_ns")] if has_ns else []) + [
-        F.col(c).cast("string").alias(c) for c in content_cols
-    ]
+        (F.lit(None) if time_ns_col is None else F.col(time_ns_col)).cast("long").alias("_ns"),
+    ] + [F.col(c).cast("string").alias(c) for c in content_cols]
     aggs = [F.sort_array(F.collect_list(F.struct(*struct_fields))).alias("_logs")]
     if topic_col is not None and topic_col not in group_cols:
         aggs.append(F.first(topic_col).cast("string").alias("_topic"))
@@ -581,38 +596,10 @@ def sls_pb_encode_groups(
         else F.col(topic_col).cast("string") if topic_col in group_cols
         else F.col("_topic")
     )
-    ccols = list(content_cols)
-
-    @F.pandas_udf("binary")
-    def enc(logs: pd.Series, topic: pd.Series) -> pd.Series:
-        def one(lgs, tp):
-            lg = []
-            for r in lgs:
-                log = {
-                    # NULL time -> 0, WRITTEN on the wire (Log.time is
-                    # proto2 required; encode_message serializes present
-                    # zeros) — one dirty row must not abort the encode
-                    "time": 0 if r["_t"] is None else int(r["_t"]),
-                    "contents": [
-                        {"key": c,
-                         "value": "" if r[c] is None else r[c]}
-                        for c in ccols
-                    ],
-                }
-                if has_ns and r["_ns"] is not None:
-                    log["timeNs"] = int(r["_ns"])
-                lg.append(log)
-            group = {"logs": lg, "source": source, "logTags": taglist}
-            if tp is not None:
-                group["topic"] = tp
-            return encode_message(group, LOG_GROUP)
-
-        return pd.Series(
-            [one(lgs, tp) for lgs, tp in zip(logs.tolist(), topic.tolist())]
-        )
-
+    fn = _codec_udf(df.sparkSession, "ilogtail_sls_pb_encode", "Encode", BinaryType())
     return aggd.select(
-        *group_cols, enc(F.col("_logs"), topic_expr).alias("pb")
+        *group_cols,
+        F.call_function(fn, F.col("_logs"), topic_expr, F.lit(tail)).alias("pb"),
     )
 
 
@@ -726,9 +713,9 @@ def prom_remote_write_encode(
     timestamp — the encoder's ns→ms division happens at the caller as
     unix_millis, avoiding big-int precision loss in doubles).
 
-    Same scale shape as sls_pb_encode_groups: ONE hash aggregate then
-    a scalar Arrow-batched pandas UDF — one Python call per Arrow
-    batch of groups, never per group."""
+    The aggregate of sls_pb_encode_groups (ONE hash aggregate), then a
+    scalar Arrow-batched pandas UDF — one Python call per Arrow batch
+    of groups, never per group."""
     from pyspark.sql import functions as F
 
     tcols = list(tag_cols)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -73,13 +74,17 @@ def run_with_checkpoint(
     """Process bucket-by-bucket with commit-after-write.
 
     ONE pass writes the input partitioned by bucket
-    (`_bucketed/_bucket=<b>/`), then every per-bucket read is
+    (`_bucketed/input/_bucket=<b>/`), then every per-bucket read is
     PARTITION-PRUNED — total input I/O is one scan + one write + one
     pruned read per bucket, instead of ``num_buckets`` full scans with
     a hash filter. The bucketed copy is reused by a resumed run (it
     carries its own _SUCCESS marker), so a killed job re-reads only
     uncommitted bucket directories — the parquet rendering of Iceberg
-    bucket-partition pruning.
+    bucket-partition pruning. `_bucketed/` hides the copy from readers
+    of ``out_dir``; the path read is its non-hidden `input` leaf, since
+    Spark ignores a read path whose name starts with `_` (with a
+    warning). A copy in the older layout (`_bucketed/_bucket=<b>/`) is
+    never reused: the run rewrites `_bucketed/` whole.
 
     fail_after: test hook — raise after N successful bucket commits
     (simulates a mid-run kill for the resume test).
@@ -90,12 +95,14 @@ def run_with_checkpoint(
     commit_dir = commit_dir or os.path.join(out_dir, "_commits")
     log = CommitLog(commit_dir)
     done = log.committed_buckets()
-    bdir = os.path.join(out_dir, "_bucketed")
+    hidden = os.path.join(out_dir, "_bucketed")
+    bdir = os.path.join(hidden, "input")
     # the bucketed copy belongs to ONE logical run: reuse it only when
     # actually resuming (commits exist); a fresh run always rewrites it
     # from the passed df, so a changed input or a cleared commit log
     # can never silently replay stale data
     if not (done and os.path.exists(os.path.join(bdir, "_SUCCESS"))):
+        shutil.rmtree(hidden, ignore_errors=True)
         (
             df.withColumn("_bucket", bucket_of(F.col(key_col), num_buckets))
             .repartition(num_buckets, F.col("_bucket"))

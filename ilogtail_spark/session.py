@@ -14,10 +14,13 @@ from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+# The JVM side of the engine (sources and build script in ``jvm/``):
 # Hadoop's local filesystem, setting permissions without a forked
-# ``chmod`` per written file; source and build script in ``jvm/``
-LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-localfs.jar")
+# ``chmod`` per written file, for ``FileSystem`` and ``FileContext``
+# callers, and the SLS LogGroup codec (``operators/pb.py``)
+JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "ilogtail-jvm.jar")
 LOCAL_FS_CLASS = "ilogtail.spark.fs.NioLocalFileSystem"
+LOCAL_FS_CONTEXT_CLASS = "ilogtail.spark.fs.NioLocalFs"
 
 
 def default_driver_memory(
@@ -72,8 +75,8 @@ def get_spark(
     "true"}``; PySpark reads the setting once per process, at the first
     wrapped call after a session exists.
 
-    ``file://`` paths go through ``LOCAL_FS_CLASS`` (see
-    ``_use_local_fs``).
+    ``JVM_JAR`` is on the driver's classpath and ``file://`` paths go
+    through ``LOCAL_FS_CLASS`` (see ``_use_jvm_jar``).
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -104,7 +107,7 @@ def get_spark(
         )
     )
     conf = dict(extra_conf or {})
-    _use_local_fs(conf)
+    _use_jvm_jar(conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -112,18 +115,21 @@ def get_spark(
     return spark
 
 
-def _use_local_fs(conf: dict[str, str]) -> None:
+def _use_jvm_jar(conf: dict[str, str]) -> None:
     """Point ``spark.hadoop.fs.file.impl`` in ``conf`` at
-    ``LOCAL_FS_CLASS`` when the session about to start can load it.
+    ``LOCAL_FS_CLASS``, and ``spark.hadoop.fs.AbstractFileSystem.file.impl``
+    at ``LOCAL_FS_CONTEXT_CLASS``, when the session about to start can
+    load them.
 
     A JVM's classpath is fixed when it starts. When the session will
-    launch the JVM, ``LOCAL_FS_JAR`` is appended to
+    launch the JVM, ``JVM_JAR`` is appended to
     ``spark.driver.extraClassPath`` (after a classpath the caller
     passed). A new session in a JVM that is already running uses the
     class only when that JVM can load it. An active SparkContext is
     returned as it is, and under ``spark-submit`` the launcher owns the
-    classpath (``submit.sh`` passes both settings itself): both keep
-    the filesystem they have.
+    classpath (``submit.sh`` passes these settings itself): both keep
+    the filesystem they have. Without the jar the pb codec operators
+    raise an error that names it.
     """
     if SparkContext._active_spark_context is not None:
         return
@@ -132,7 +138,7 @@ def _use_local_fs(conf: dict[str, str]) -> None:
             return
         classpath = conf.get("spark.driver.extraClassPath")
         conf["spark.driver.extraClassPath"] = (
-            f"{classpath}{os.pathsep}{LOCAL_FS_JAR}" if classpath else LOCAL_FS_JAR
+            f"{classpath}{os.pathsep}{JVM_JAR}" if classpath else JVM_JAR
         )
     else:
         try:
@@ -140,3 +146,4 @@ def _use_local_fs(conf: dict[str, str]) -> None:
         except Py4JError:
             return
     conf["spark.hadoop.fs.file.impl"] = LOCAL_FS_CLASS
+    conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] = LOCAL_FS_CONTEXT_CLASS

@@ -8,9 +8,11 @@
 # max(nproc, 8), as get_spark sizes a local session; on a real cluster
 # set e.g.
 #   MASTER=yarn SHUFFLE_PARTITIONS=64 ./submit.sh ...
-# file:// paths go through ilogtail_spark/jvm/nio-localfs.jar's
-# filesystem, which sets permissions without forking chmod (see
-# ilogtail_spark/session.py).
+# ilogtail_spark/jvm/ilogtail-jvm.jar holds the SLS LogGroup codec and
+# the file:// filesystem, which sets permissions without forking chmod
+# (see ilogtail_spark/session.py). It is on the driver's classpath; on a
+# cluster master it is also shipped to the executors with --jars, which a
+# local[...] master does not need (its executors are the driver).
 set -euo pipefail
 cd "$(dirname "$0")"
 
@@ -27,14 +29,21 @@ with zipfile.ZipFile('$ZIP', 'w') as z:
 "
 
 NCORES="$(nproc)"
-JAR="$PWD/ilogtail_spark/jvm/nio-localfs.jar"
+MASTER="${MASTER:-local[$NCORES]}"
+JAR="$PWD/ilogtail_spark/jvm/ilogtail-jvm.jar"
+SHIP_JAR=()
+case "$MASTER" in
+  local | local\[*) ;;
+  *) SHIP_JAR=(--jars "$JAR") ;;
+esac
 exec spark-submit \
-  --master "${MASTER:-local[$NCORES]}" \
+  --master "$MASTER" \
   --conf spark.sql.shuffle.partitions="${SHUFFLE_PARTITIONS:-$(( NCORES > 8 ? NCORES : 8 ))}" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.session.timeZone=UTC \
   --driver-class-path "$JAR" \
-  --jars "$JAR" \
+  ${SHIP_JAR[@]+"${SHIP_JAR[@]}"} \
   --conf spark.hadoop.fs.file.impl=ilogtail.spark.fs.NioLocalFileSystem \
+  --conf spark.hadoop.fs.AbstractFileSystem.file.impl=ilogtail.spark.fs.NioLocalFs \
   --py-files "$ZIP" \
   run_pipeline.py "$@"

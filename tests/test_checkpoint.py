@@ -50,7 +50,7 @@ def test_bucketed_input_is_partition_pruned(spark, tmp_path):
     df = spark.range(0, 1000).withColumn("conv_id", F.concat(F.lit("c"), (F.col("id") % 57).cast("string")))
     out_dir = str(tmp_path / "out")
     run_with_checkpoint(df, out_dir, lambda d: d, num_buckets=4)
-    bdir = os.path.join(out_dir, "_bucketed")
+    bdir = os.path.join(out_dir, "_bucketed", "input")
     assert os.path.exists(os.path.join(bdir, "_SUCCESS"))
     assert sorted(
         d for d in os.listdir(bdir) if d.startswith("_bucket=")
@@ -66,3 +66,28 @@ def test_bucketed_input_is_partition_pruned(spark, tmp_path):
         for b in range(4)
     )
     assert total == 1000
+
+
+def test_old_layout_bucketed_copy_is_rewritten(spark, tmp_path):
+    """A bucketed copy in the older layout (``_bucketed/_bucket=<b>/``,
+    a read path Spark calls hidden) is never reused by a resumed run:
+    the run rewrites ``_bucketed/`` whole, from the input it is given."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 200).withColumn("conv_id", F.concat(F.lit("c"), (F.col("id") % 17).cast("string")))
+    out_dir = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_with_checkpoint(df, out_dir, lambda d: d, num_buckets=4, fail_after=1)
+    # replace the copy with a stale one in the old layout
+    hidden = os.path.join(out_dir, "_bucketed")
+    stale = df.filter(F.col("id") < 0).withColumn("_bucket", F.lit(0).cast("int"))
+    stale.write.mode("overwrite").partitionBy("_bucket").parquet(hidden)
+    assert os.path.exists(os.path.join(hidden, "_SUCCESS"))
+
+    res = run_with_checkpoint(df, out_dir, lambda d: d, num_buckets=4)
+    assert len(res["processed"]) == 3 and len(res["skipped"]) == 1
+    assert sorted(os.listdir(hidden)) == ["input"]
+    total = sum(spark.read.parquet(os.path.join(out_dir, f"bucket={b}")).count() for b in range(4))
+    assert total == 200

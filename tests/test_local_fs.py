@@ -15,7 +15,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 
 from ilogtail_spark import session
-from ilogtail_spark.session import LOCAL_FS_CLASS, LOCAL_FS_JAR
+from ilogtail_spark.session import JVM_JAR, LOCAL_FS_CLASS, LOCAL_FS_CONTEXT_CLASS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,12 +62,9 @@ def _modes(root):
     return {p: stat.S_IMODE(os.stat(p).st_mode) for p in paths}
 
 
-def test_cli_forks_no_chmod(tmp_path, sf_dir):
-    """A whole CLI request with a logging ``chmod`` first on ``PATH``
-    logs nothing. The one line logged is Hadoop's own shell ``chmod``,
-    run afterwards to show the JVM finds the logging one. The process
-    umask is 077, so the output's modes come from the filesystem's
-    permission calls with Hadoop's default umask, 022."""
+def _logging_chmod(tmp_path):
+    """A ``PATH`` whose first ``chmod`` logs each call to the returned
+    file and then runs the real one."""
     real = shutil.which("chmod")
     bin_dir = tmp_path / "bin"
     bin_dir.mkdir()
@@ -75,7 +72,18 @@ def test_cli_forks_no_chmod(tmp_path, sf_dir):
     shim = bin_dir / "chmod"
     shim.write_text(f'#!/bin/sh\necho "chmod $*" >> "{log}"\nexec {real} "$@"\n')
     shim.chmod(0o755)
+    return f"{bin_dir}{os.pathsep}{os.environ['PATH']}", log
+
+
+def test_cli_forks_no_chmod(tmp_path, sf_dir):
+    """A whole CLI request with a logging ``chmod`` first on ``PATH``
+    logs nothing. The one line logged is Hadoop's own shell ``chmod``,
+    run afterwards to show the JVM finds the logging one. The process
+    umask is 077, so the output's modes come from the filesystem's
+    permission calls with Hadoop's default umask, 022."""
+    path, log = _logging_chmod(tmp_path)
     out = tmp_path / "out"
+    control = str(out / "metrics" / "_SUCCESS")
     _run(
         f"""
         import contextlib, io
@@ -85,23 +93,62 @@ def test_cli_forks_no_chmod(tmp_path, sf_dir):
         spark = get_spark("fork-count")
         with contextlib.redirect_stdout(io.StringIO()):
             run_pipeline.main(["--input", {sf_dir!r}, "--output", {str(out)!r}])
-        jvm = spark._jvm
-        cmd = spark.sparkContext._gateway.new_array(jvm.String, 3)
-        cmd[0], cmd[1], cmd[2] = "chmod", "644", {str(out / "metrics" / "_SUCCESS")!r}
-        jvm.org.apache.hadoop.util.Shell.execCommand(cmd)
+        spark._jvm.org.apache.hadoop.fs.FileUtil.chmod({control!r}, "644")
         spark.stop()
         """,
         tmp_path,
         umask=0o077,
-        PATH=f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
+        PATH=path,
     )
-    assert log.read_text().splitlines() == [f"chmod 644 {out / 'metrics' / '_SUCCESS'}"]
+    assert log.read_text().splitlines() == [f"chmod 644 {control}"]
     assert sorted(p.name for p in (out / "routed").iterdir() if p.is_dir()) == [
         "default", "sink_all", "sink_errors", "sink_parse_fail", "sink_tools",
     ]
     modes = _modes(out)
     assert {m for p, m in modes.items() if os.path.isdir(p)} == {0o755}
     assert {m for p, m in modes.items() if not os.path.isdir(p)} == {0o644}
+
+
+def test_streaming_checkpoint_forks_no_chmod(tmp_path):
+    """Structured Streaming writes its checkpoint and ``_spark_metadata``
+    logs through ``FileContext``, whose ``file://`` class is
+    ``LOCAL_FS_CONTEXT_CLASS``: a one-batch ``trigger(once=True)``
+    parquet-to-parquet stream forks no ``chmod`` (the one line logged is
+    the control), and under umask 077 every directory and file it writes
+    has the modes Hadoop's umask 022 gives, ``.crc`` files included."""
+    path, log = _logging_chmod(tmp_path)
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    control = os.path.join(out, "_spark_metadata", "0")
+    printed = _run(
+        f"""
+        from ilogtail_spark.session import get_spark
+
+        spark = get_spark("stream-fork-count", cores=1)
+        spark.range(10).write.parquet({src!r})
+        query = (
+            spark.readStream.schema("id bigint").parquet({src!r})
+            .writeStream.format("parquet").option("checkpointLocation", {ckpt!r})
+            .trigger(once=True).start({out!r})
+        )
+        query.awaitTermination()
+        jvm = spark._jvm
+        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+        print(spark.read.parquet({out!r}).count(), fc.getDefaultFileSystem().getClass().getName())
+        spark._jvm.org.apache.hadoop.fs.FileUtil.chmod({control!r}, "644")
+        spark.stop()
+        """,
+        tmp_path,
+        umask=0o077,
+        PATH=path,
+    )
+    assert printed.split()[-2:] == ["10", LOCAL_FS_CONTEXT_CLASS]
+    assert log.read_text().splitlines() == [f"chmod 644 {control}"]
+    for root in (out, ckpt):
+        modes = _modes(root)
+        assert any(p.endswith(".crc") for p in modes), root
+        assert {m for p, m in modes.items() if os.path.isdir(p)} == {0o755}, root
+        assert {m for p, m in modes.items() if not os.path.isdir(p)} == {0o644}, root
 
 
 def test_written_modes_follow_the_hadoop_umask(spark, tmp_path):
@@ -165,18 +212,19 @@ def test_use_local_fs_appends_to_a_callers_classpath(monkeypatch):
     monkeypatch.setattr(SparkContext, "_jvm", None)
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     conf = {"spark.driver.extraClassPath": "lib/a.jar"}
-    session._use_local_fs(conf)
+    session._use_jvm_jar(conf)
     assert conf == {
-        "spark.driver.extraClassPath": f"lib/a.jar{os.pathsep}{LOCAL_FS_JAR}",
+        "spark.driver.extraClassPath": f"lib/a.jar{os.pathsep}{JVM_JAR}",
         "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": LOCAL_FS_CONTEXT_CLASS,
     }
     conf = {}
-    session._use_local_fs(conf)
-    assert conf["spark.driver.extraClassPath"] == LOCAL_FS_JAR
+    session._use_jvm_jar(conf)
+    assert conf["spark.driver.extraClassPath"] == JVM_JAR
     # under spark-submit the launcher owns the classpath
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
     conf = {}
-    session._use_local_fs(conf)
+    session._use_jvm_jar(conf)
     assert conf == {}
 
 
@@ -226,9 +274,9 @@ def test_committed_jar_is_rebuilt_byte_for_byte(tmp_path):
         with zipfile.ZipFile(path) as z:
             return {n: z.read(n) for n in z.namelist() if n.endswith(".class")}
 
-    committed = classes(LOCAL_FS_JAR)
-    assert set(committed) == {
-        "ilogtail/spark/fs/NioLocalFileSystem.class",
-        "ilogtail/spark/fs/NioLocalFileSystem$Raw.class",
+    committed = classes(JVM_JAR)
+    assert {n.split("/")[-1].split("$")[0].removesuffix(".class") for n in committed} == {
+        "NioLocalFileSystem", "NioLocalFs", "SlsLogGroup",
     }
-    assert classes(tmp_path / "nio-localfs.jar") == committed
+    assert (tmp_path / "ilogtail-jvm.jar").read_bytes() == open(JVM_JAR, "rb").read()
+    assert classes(tmp_path / "ilogtail-jvm.jar") == committed

@@ -7,6 +7,10 @@ CLI path scans no Python RDD, and the dissect parse path contains no
 java.util.regex expression.
 """
 
+import os
+import subprocess
+import sys
+
 from pyspark.sql import functions as F
 
 from ilogtail_spark.plans.pipeline import (
@@ -266,13 +270,62 @@ def test_otel_pb_decode_is_narrow(spark):
         assert "ArrowEvalPython" in plan  # the pb->protojson hop, batched
 
 
+# plan nodes that run Python code in a forked worker
+_PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas", "PythonUDF")
+
+
+def _formatted(df) -> str:
+    """The executed plan with every node's expressions, aggregate
+    results included (``explain("formatted")``)."""
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
 def test_sls_pb_decode_is_narrow(spark):
+    """One projection: ``inline`` of the JVM decode UDF, called once per
+    payload, with no Exchange, no Filter and no Python node."""
     from ilogtail_spark.operators.pb import sls_pb_decode
 
     df = spark.range(2).select(F.col("id"), F.lit(b"\x00").cast("binary").alias("pb"))
-    plan = _plan(sls_pb_decode(df, "pb", keep=["id"]))
-    assert "Exchange" not in plan, plan
-    assert "MapInPandas" in plan
+    for drop_invalid in (True, False):
+        plan = _formatted(sls_pb_decode(df, "pb", keep=["id"], drop_invalid=drop_invalid))
+        assert "Exchange" not in plan and "Filter" not in plan, plan
+        assert not [n for n in _PYTHON_NODES if n in plan], plan
+        assert plan.count("inline(ilogtail_sls_pb_decode") == 1, plan
+
+
+def test_q76_codec_runs_in_the_jvm(spark, sf_dir):
+    """q76 (encode then decode) calls each JVM codec UDF once and has no
+    Python node; the pass itself, in a fresh JVM, forks no Python
+    worker: the JVM has no child process afterwards, and has one after
+    a Python RDD action, the control."""
+    import __spark_entry__ as entry
+
+    plan = _formatted(entry.queries()["q76_sls_pb"](spark, sf_dir))
+    assert plan.count("ilogtail_sls_pb_encode(") == 1, plan
+    assert plan.count("ilogtail_sls_pb_decode(") == 1, plan
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
+
+    code = f"""
+import __spark_entry__ as entry
+from ilogtail_spark.session import get_spark
+
+spark = get_spark("q76-forks", cores=2)
+the_jvm = spark._jvm.java.lang.ProcessHandle.current()
+rows = entry.queries()["q76_sls_pb"](spark, {sf_dir!r}).count()
+after_q76 = the_jvm.descendants().count()
+spark.sparkContext.parallelize([1]).map(lambda x: x).count()
+print(rows, after_q76, the_jvm.descendants().count())
+spark.stop()
+"""
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g"}
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    rows, after_q76, after_control = map(int, proc.stdout.split()[-3:])
+    assert rows > 0 and after_q76 == 0 and after_control > 0, proc.stdout
 
 
 def test_repetition_stats_is_narrow(spark):

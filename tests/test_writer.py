@@ -191,12 +191,26 @@ def _keys_by_sink(table):
 def test_cli_resume_matches_the_default_path(spark, sf_dir, tmp_path):
     """``--resume`` writes each bucket's files in (conv_id, turn_idx)
     order within every sink, the same routed rows as the default path,
-    and the same aggregates."""
+    and the same aggregates. The resumed run is a child process, so its
+    stderr shows that Spark read no path it calls hidden (the bucketed
+    input copy once was ``routed/_bucketed``)."""
+    import subprocess
+    import sys
+
     import run_pipeline
 
     default, resumed = str(tmp_path / "default"), str(tmp_path / "resumed")
     run_pipeline.main(["--input", sf_dir, "--output", default])
-    run_pipeline.main(["--input", sf_dir, "--output", resumed, "--resume", "--num-buckets", "3"])
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g"}
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    proc = subprocess.run(
+        [sys.executable, "run_pipeline.py", "--input", sf_dir, "--output", resumed, "--resume", "--num-buckets", "3"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "All paths were ignored" not in proc.stderr, proc.stderr[-4000:]
+    assert os.path.exists(os.path.join(resumed, "routed", "_bucketed", "input", "_SUCCESS"))
 
     parts = glob.glob(os.path.join(resumed, "routed", "bucket=*", "*.parquet"))
     assert parts
