@@ -1,10 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
-The container has no image/audio decode libraries, so the decode step
-is STUBBED (deterministic fake features, clearly marked) — but the
-Spark-side plumbing is real and tested: binary columns + typed
-metadata struct, Arrow-batched ``mapInPandas`` with controlled batch
-sizes, partition-count-preserving narrow execution.
+There is no media decoder here, so feature extraction is STUBBED
+(deterministic fake features, clearly marked) — but the Spark-side
+plumbing is real and tested: binary columns + typed metadata struct,
+Arrow-batched ``mapInPandas`` with controlled batch sizes,
+partition-count-preserving narrow execution.
 
 At 100 TB of media this shape matters more than the codec: batches
 stream through Arrow without materializing a partition in memory, and
@@ -39,105 +39,6 @@ def attach_binary_payload(
             F.octet_length(payload).alias("size"),
         ),
     )
-
-
-def _pil():
-    """Runtime-detected PIL — None when the image lacks it."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_media(payload: bytes) -> tuple[int, int]:
-    """Decode (width, height) from an image payload via PIL when it is
-    installed; raises NotImplementedError otherwise (this container
-    ships no codecs — the deterministic fake below keeps the plumbing
-    testable either way)."""
-    Image = _pil()
-    if Image is None:
-        raise NotImplementedError(
-            "media decode requires image libraries not present in this image"
-        )
-    import io
-
-    with Image.open(io.BytesIO(payload)) as im:
-        return im.width, im.height
-
-
-RESIZE_SCHEMA = "doc_id long, width int, height int, thumb binary"
-FRAMES_SCHEMA = "doc_id long, frame_idx int, frame binary"
-
-
-def resize_media(
-    df: DataFrame,
-    width: int = 64,
-    height: int = 64,
-    id_col: str = "doc_id",
-    decoder: str = "fake",  # fake | pil
-) -> DataFrame:
-    """Resize plumbing: same Arrow-batched mapInPandas shape as a real
-    thumbnailer. ``decoder='pil'`` uses PIL when installed (resize to
-    exactly width×height, grayscale raw bytes — width*height bytes,
-    the same size contract as the fake); ``'fake'`` (default —
-    deterministic, oracle-checkable) emits a byte-repeated thumbnail
-    of exactly width*height bytes derived from the payload. Either
-    way schema, batch flow and output sizes are real and tested."""
-    import numpy as np
-
-    use_pil = decoder == "pil"
-    if use_pil and _pil() is None:
-        raise NotImplementedError("decoder='pil' requires PIL in the image")
-
-    def fake_thumb(p: bytes) -> bytes:
-        rep = p * ((width * height) // max(len(p), 1) + 1)
-        return bytes(np.frombuffer(rep[: width * height], dtype=np.uint8))
-
-    def pil_thumb(p: bytes) -> bytes:
-        import io
-
-        Image = _pil()
-        with Image.open(io.BytesIO(p)) as im:
-            return im.resize((width, height)).convert("L").tobytes()
-
-    thumb_fn = pil_thumb if use_pil else fake_thumb
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = [thumb_fn(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": width,
-                    "height": height,
-                    "thumb": thumbs,
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame, n_frames: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """Frame-sampling plumbing: one input row fans out to n_frames
-    output rows (the generator shape a video decoder needs —
-    mapInPandas may emit MORE rows than it consumes). Fake frames are
-    evenly-spaced payload slices; a libav reader would replace the
-    slicing while keeping the exact same batch contract."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf[id_col], pdf["payload"]):
-                step = max(len(p) // n_frames, 1)
-                for i in range(n_frames):
-                    rows.append((did, i, bytes(p[i * step : (i + 1) * step])))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame"])
-
-    return df.select(id_col, "payload").mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

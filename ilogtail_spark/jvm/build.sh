@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Build ilogtail-jvm.jar, the JVM side of ilogtail_spark (the file://
-# filesystem and the SLS LogGroup codec), from every .java file in this
-# directory against the Spark and Hadoop classes bundled with pyspark.
+# filesystem, the SLS LogGroup codec and the native timestamp parser),
+# from every .java file in this directory against the Spark and Hadoop
+# classes bundled with pyspark.
 # The output is reproducible: class files for Java 17, fixed entry dates,
 # no manifest.
 #

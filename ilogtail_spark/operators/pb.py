@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from ilogtail_spark.operators.registry import cfg_pop, register
+from ilogtail_spark.session import java_udf
 
 # ---------------------------------------------------------------------------
 # wire primitives (protobuf encoding spec)
@@ -493,34 +494,12 @@ _DECODED = StructType([
 ])
 # drop_invalid -> (session function, class, return type)
 _DECODE_UDFS = {
-    True: ("ilogtail_sls_pb_decode", "Decode", ArrayType(_DECODED)),
+    True: ("ilogtail_sls_pb_decode", f"{_CODEC_CLASS}$Decode", ArrayType(_DECODED)),
     False: (
-        "ilogtail_sls_pb_decode_keep_invalid", "DecodeKeepInvalid",
+        "ilogtail_sls_pb_decode_keep_invalid", f"{_CODEC_CLASS}$DecodeKeepInvalid",
         ArrayType(StructType(_DECODED.fields + [StructField("_pb_ok", BooleanType())])),
     ),
 }
-
-
-def _codec_udf(spark, name: str, cls: str, return_type: ArrayType | BinaryType) -> str:
-    """Register ``_CODEC_CLASS$cls`` as the session function ``name``
-    and return the name; raise naming the jar when the JVM cannot load
-    the class (a session started without ``session.JVM_JAR``)."""
-    from pyspark.errors import AnalysisException
-    from py4j.protocol import Py4JError
-
-    from ilogtail_spark.session import JVM_JAR
-
-    try:
-        spark.udf.registerJavaFunction(name, f"{_CODEC_CLASS}${cls}", return_type)
-    except (AnalysisException, Py4JError) as err:
-        if _CODEC_CLASS not in str(err):
-            raise
-        raise RuntimeError(
-            f"the SLS LogGroup codec ({_CODEC_CLASS}) is not on this JVM's "
-            f"classpath; start the session with get_spark() or put {JVM_JAR} "
-            "on spark.driver.extraClassPath (and --jars on a cluster)"
-        ) from err
-    return name
 
 
 def sls_pb_decode(
@@ -542,7 +521,7 @@ def sls_pb_decode(
     from pyspark.sql import functions as F
 
     keep = list(keep or [])
-    fn = _codec_udf(df.sparkSession, *_DECODE_UDFS[drop_invalid])
+    fn = java_udf(df.sparkSession, *_DECODE_UDFS[drop_invalid])
     # every output column is nullable, kept ones included (a CASE with
     # no ELSE; the optimizer folds it away for a non-nullable column)
     kept = [
@@ -596,7 +575,7 @@ def sls_pb_encode_groups(
         else F.col(topic_col).cast("string") if topic_col in group_cols
         else F.col("_topic")
     )
-    fn = _codec_udf(df.sparkSession, "ilogtail_sls_pb_encode", "Encode", BinaryType())
+    fn = java_udf(df.sparkSession, "ilogtail_sls_pb_encode", f"{_CODEC_CLASS}$Encode", BinaryType())
     return aggd.select(
         *group_cols,
         F.call_function(fn, F.col("_logs"), topic_expr, F.lit(tail)).alias("pb"),

@@ -690,23 +690,6 @@ def encrypt_fields_native(
     return df
 
 
-def decrypt_fields_native(
-    df: DataFrame, keys: list[str], key_hex: str, iv_hex: str = "0" * 32
-) -> DataFrame:
-    """Inverse of :func:`encrypt_fields_native`: re-prepend the pinned
-    IV to the hex ciphertext and AES-CBC decrypt."""
-    key, iv = _aes_hex_params(key_hex, iv_hex)
-    for k in keys:
-        if k not in df.columns:
-            continue
-        dec = F.aes_decrypt(
-            F.concat(F.lit(iv), F.unhex(F.col(k))),
-            F.lit(key), F.lit("CBC"), F.lit("PKCS"),
-        )
-        df = df.withColumn(k, dec.cast("string"))
-    return df
-
-
 def geoip_enrich(
     df: DataFrame,
     ranges: DataFrame,

@@ -12,12 +12,15 @@ import os
 
 from py4j.protocol import Py4JError
 from pyspark import SparkContext
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+from pyspark.sql.types import DataType
 
 # The JVM side of the engine (sources and build script in ``jvm/``):
 # Hadoop's local filesystem, setting permissions without a forked
 # ``chmod`` per written file, for ``FileSystem`` and ``FileContext``
-# callers, and the SLS LogGroup codec (``operators/pb.py``)
+# callers; the SLS LogGroup codec (``operators/pb.py``); and the native
+# timestamp parser (``operators/strptime_native.py``)
 JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "ilogtail-jvm.jar")
 LOCAL_FS_CLASS = "ilogtail.spark.fs.NioLocalFileSystem"
 LOCAL_FS_CONTEXT_CLASS = "ilogtail.spark.fs.NioLocalFs"
@@ -128,8 +131,8 @@ def _use_jvm_jar(conf: dict[str, str]) -> None:
     class only when that JVM can load it. An active SparkContext is
     returned as it is, and under ``spark-submit`` the launcher owns the
     classpath (``submit.sh`` passes these settings itself): both keep
-    the filesystem they have. Without the jar the pb codec operators
-    raise an error that names it.
+    the filesystem they have. Without the jar the operators that call its
+    UDFs raise an error that names it (``java_udf``).
     """
     if SparkContext._active_spark_context is not None:
         return
@@ -147,3 +150,21 @@ def _use_jvm_jar(conf: dict[str, str]) -> None:
             return
     conf["spark.hadoop.fs.file.impl"] = LOCAL_FS_CLASS
     conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] = LOCAL_FS_CONTEXT_CLASS
+
+
+def java_udf(spark: SparkSession, name: str, cls: str, return_type: DataType) -> str:
+    """Register the Java UDF class ``cls`` (one of ``JVM_JAR``'s) as the
+    session function ``name`` and return the name. Raise naming the jar
+    when the JVM cannot load the class: a session started without
+    ``get_spark``, so without ``JVM_JAR`` on its classpath."""
+    try:
+        spark.udf.registerJavaFunction(name, cls, return_type)
+    except (AnalysisException, Py4JError) as err:
+        if cls not in str(err):
+            raise
+        raise RuntimeError(
+            f"{cls} is not on this JVM's classpath; start the session with "
+            f"get_spark() or put {JVM_JAR} on spark.driver.extraClassPath "
+            "(and --jars on a cluster)"
+        ) from err
+    return name

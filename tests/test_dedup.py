@@ -119,34 +119,6 @@ def test_dedup_clusters_long_chain_pointer_jumping(spark):
     assert set(out.values()) == {1}
 
 
-def test_multimodal_resize_and_frame_sample_plumbing(spark):
-    """The resize/frame-sample mapInPandas plumbing: fixed-size
-    thumbnails, 1->n_frames fan-out, deterministic fakes."""
-    from ilogtail_spark.functions.multimodal import (
-        attach_binary_payload,
-        resize_media,
-        sample_frames,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "hello world document"), (2, "x")], "doc_id long, text string"
-    )
-    media = attach_binary_payload(docs)
-    thumbs = {r["doc_id"]: r for r in resize_media(media, 8, 8).collect()}
-    assert len(thumbs[1]["thumb"]) == 64 and len(thumbs[2]["thumb"]) == 64
-    assert (thumbs[1]["width"], thumbs[1]["height"]) == (8, 8)
-
-    frames = sample_frames(media, n_frames=3).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    assert by_doc == {1: [0, 1, 2], 2: [0, 1, 2]}
-    # determinism: same input -> same frames
-    again = sample_frames(media, n_frames=3).collect()
-    assert sorted((r["doc_id"], r["frame_idx"], bytes(r["frame"])) for r in frames) == \
-           sorted((r["doc_id"], r["frame_idx"], bytes(r["frame"])) for r in again)
-
-
 def test_ngram_threshold_bounds_candidate_retention(spark, sf_dir):
     """q23 scale guard: the thresholded pair set must be orders of
     magnitude smaller than the full colliding-pair set (the top-k sort
@@ -157,35 +129,6 @@ def test_ngram_threshold_bounds_candidate_retention(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     kept = ngram_jaccard_pairs(docs, threshold=0.3).count()
     assert 0 < kept < 200, kept  # planted near-dups only, not all collisions
-
-
-def test_multimodal_pil_decoder_when_available(spark):
-    """The marked decode line is swappable: with PIL installed the
-    real path decodes/resizes actual image bytes; without it the
-    NotImplementedError contract holds (and this test skips the PIL
-    leg)."""
-    import pytest
-
-    from ilogtail_spark.functions.multimodal import _pil, decode_media, resize_media
-
-    if _pil() is None:
-        with pytest.raises(NotImplementedError):
-            decode_media(b"\x89PNG...")
-        df = spark.createDataFrame([(1, b"xyz")], "doc_id long, payload binary")
-        with pytest.raises(NotImplementedError):
-            resize_media(df, 4, 4, decoder="pil")
-        pytest.skip("PIL not installed — real decode leg not exercisable here")
-    # real leg: build a tiny PNG in memory, decode + resize through Spark
-    import io
-
-    Image = _pil()
-    buf = io.BytesIO()
-    Image.new("RGB", (8, 6), (10, 20, 30)).save(buf, format="PNG")
-    png = buf.getvalue()
-    assert decode_media(png) == (8, 6)
-    df = spark.createDataFrame([(1, png)], "doc_id long, payload binary")
-    out = resize_media(df, 4, 4, decoder="pil").first()
-    assert len(out["thumb"]) == 16
 
 
 def test_duplicated_spans_exact(spark):

@@ -191,15 +191,23 @@ def test_sls_pb_spark_roundtrip(spark):
         order_col="turn_idx", topic_col="conv_id", source="s1",
         tags={"env": "t"},
     )
-    rows = sls_pb_decode(enc, "pb", keep=["conv_id"]).collect()
+    # maps compared as their entry arrays: a collected map is a dict
+    # built from a Java HashMap, which loses the entry order
+    from pyspark.sql import functions as F
+
+    dec = sls_pb_decode(enc, "pb", keep=["conv_id"])
+    rows = dec.withColumns({c: F.map_entries(c) for c in ("tags", "contents")}).collect()
     assert len(rows) == 3
     byconv = {}
     for r in rows:
         byconv.setdefault(r["conv_id"], []).append(r)
-    assert [x["contents"]["role"] for x in byconv["c1"]] == ["user", "assistant"]
+    assert [[tuple(e) for e in x["contents"]] for x in byconv["c1"]] == [
+        [("role", "user"), ("text", "hi")], [("role", "assistant"), ("text", "yo")],
+    ]
+    assert [tuple(e) for e in byconv["c2"][0]["contents"]] == [("role", "user"), ("text", "x")]
     r0 = byconv["c1"][0]
     assert r0["topic"] == "c1" and r0["source"] == "s1"
-    assert r0["tags"] == {"env": "t"} and r0["log_time"] == 100
+    assert [tuple(e) for e in r0["tags"]] == [("env", "t")] and r0["log_time"] == 100
 
 
 def test_sls_pb_registry_and_invalid_drop(spark):

@@ -341,16 +341,61 @@ def test_repetition_stats_is_narrow(spark):
 
 
 def test_strptime_native_plan_stays_small(spark, sf_dir):
-    """q96 regression guard: parse_timestamp_native drops rows via a
-    Generate (explode) barrier, NOT a Filter — PushDownPredicates had
-    substituted the staged regex/assembly tree through every projection
-    into a 3.2 MB predicate (26 s at sf0.01 for a 5-variant union)."""
+    """q96 regression guard: each of the five union branches calls the
+    JVM strptime UDF once, in one projection, and drops rows via a
+    Generate (explode) barrier, NOT a Filter, which PushDownPredicates
+    would fill with copies of the call. The staged regex/assembly tree
+    this replaced was about 37 KB (3.2 MB before it was staged)."""
     import __spark_entry__ as e
 
     df = e.queries()["q96_strptime_native"](spark, sf_dir)
     plan = _plan(df)
-    assert len(plan) < 200_000, f"plan blew up to {len(plan)} chars"
+    assert len(plan) < 20_000, f"plan blew up to {len(plan)} chars"
     assert "Generate explode" in plan, plan[:2000]
+    formatted = _formatted(df)
+    assert formatted.count("ilogtail_strptime(") == 5, formatted
+    assert not [n for n in _PYTHON_NODES if n in formatted], formatted
+
+
+def test_strptime_native_calls_the_udf_once(spark):
+    """One frame, one call: also under a downstream filter on the parsed
+    time (it stays above the Generate) and on another column (it pushes
+    below the call)."""
+    from ilogtail_spark.operators.strptime_native import parse_timestamp_native
+
+    df = spark.createDataFrame([(1, "2024-01-02 03:04:05")], "id int, line string")
+    out = parse_timestamp_native(df, "line", "%Y-%m-%d %H:%M:%S", source_timezone="GMT+08:00")
+    for q in (out, out.filter(F.col("log_sec") > 0), out.filter(F.col("id") > 0)):
+        plan = _formatted(q)
+        assert plan.count("ilogtail_strptime(") == 1, plan
+        assert "Generate" in plan and not [n for n in _PYTHON_NODES if n in plan], plan
+
+
+def test_strptime_native_code_is_reused(spark):
+    """Only SourceYear 0 (DeduceYear) hands the UDF ``now``. Any other
+    call passes NULL, so its generated code carries no folded
+    ``current_timestamp()`` literal: a second query generates the same
+    source, which Spark's codegen cache serves without a compile."""
+    import time
+
+    from ilogtail_spark.operators.strptime_native import parse_timestamp_native
+
+    df = spark.range(4).selectExpr("concat('2024-01-0', CAST(id + 1 AS STRING), ' 03:04:05') AS line")
+
+    def code(source_year):
+        out = parse_timestamp_native(df, "line", "%Y-%m-%d %H:%M:%S", source_year=source_year,
+                                     discard_old=False)
+        text = spark._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "codegen")
+        assert "ilogtail_strptime" in text or "Strptime" in text, text
+        return [line for line in text.splitlines() if line.startswith("/* ")]
+
+    first = code(-1)
+    time.sleep(0.01)
+    assert first and code(-1) == first
+    # the control: DeduceYear reads now, whose literal changes per query
+    first = code(0)
+    time.sleep(0.01)
+    assert code(0) != first
 
 
 def test_apsara_plan_stays_small(spark, sf_dir):

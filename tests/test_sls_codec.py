@@ -301,18 +301,21 @@ def test_jvm_encode_equals_encode_message(spark):
 
 
 def test_codec_without_the_jar_names_it(tmp_path):
-    """A session whose JVM was started without the jar gets an error
-    that names the jar from either operator."""
+    """A session whose JVM was started without the jar gets the same
+    error, naming the jar, from every operator that calls one of its
+    UDFs: both codec legs and the native timestamp parser."""
     code = textwrap.dedent(
         """
         from pyspark.sql import SparkSession, functions as F
         from ilogtail_spark.operators.pb import sls_pb_decode, sls_pb_encode_groups
+        from ilogtail_spark.operators.strptime_native import parse_timestamp_native
 
         spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
         df = spark.range(1).select(F.col("id"), F.lit(b"").alias("pb"))
         for call in (
             lambda: sls_pb_decode(df, "pb"),
             lambda: sls_pb_encode_groups(df, ["id"], time_col="id", content_cols=[], order_col="id"),
+            lambda: parse_timestamp_native(df.selectExpr("'1' AS t"), "t", "%s"),
         ):
             try:
                 call()
@@ -328,4 +331,4 @@ def test_codec_without_the_jar_names_it(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     errors = [line for line in proc.stdout.splitlines() if line.startswith("ERROR")]
-    assert len(errors) == 2 and all(JVM_JAR in e for e in errors), proc.stdout
+    assert len(errors) == 3 and all(JVM_JAR in e for e in errors), proc.stdout

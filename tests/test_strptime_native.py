@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 
 from ilogtail_spark.common import sql_str
 from ilogtail_spark.operators.strptime_native import (
-    compile_strptime_native,
     parse_timestamp_native,
     strptime_native_struct,
 )
+from tests.strptime_sql_twin import compile_strptime_native
 
 # ---- TestParseLogTime (ProcessorParseTimestampNativeUnittest.cpp:685-701)
 VALUE_CASES = [
@@ -393,7 +393,7 @@ def test_sql_str_round_trip(spark):
     """sql_str quotes any text so Spark's parser reads it back
     unchanged: the emitter's regexes, sentinel and replacement strings
     pass through SQL literals."""
-    from ilogtail_spark.operators.strptime_native import _SEP, _Z_OFFSET
+    from tests.strptime_sql_twin import _SEP, _Z_OFFSET
 
     fmts = {f for _inp, f, *_rest in VALUE_CASES + ACCEPT_CASES + REJECT_CASES}
     texts = [

@@ -332,6 +332,18 @@ def test_tag_native_unittest_replay(spark):
     assert out5 == {"env": "prod"}
 
 
+def _decrypt_fields(df, keys, key_hex, iv_hex="0" * 32):
+    """Inverse of ``encrypt_fields_native``: re-prepend the pinned IV to
+    the hex ciphertext and AES-CBC decrypt."""
+    key, iv = bytes.fromhex(key_hex), bytes.fromhex(iv_hex)
+    for k in keys:
+        dec = F.aes_decrypt(
+            F.concat(F.lit(iv), F.unhex(F.col(k))), F.lit(key), F.lit("CBC"), F.lit("PKCS"),
+        )
+        df = df.withColumn(k, dec.cast("string"))
+    return df
+
+
 def test_encrypt_native_openssl_goldens(spark):
     """processor_encrypt exact wire format vs the Go plugin
     (processor_encrypt.go:92-207; testProcess plaintexts): hex Key ->
@@ -342,7 +354,6 @@ def test_encrypt_native_openssl_goldens(spark):
     import subprocess
 
     from ilogtail_spark.operators.registry import OPERATORS
-    from ilogtail_spark.operators.transform import decrypt_fields_native
 
     key_hex = "000102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f"
     plaintexts = ["0123456", "0123456789012345", ""]  # pad / pad-all / empty
@@ -364,8 +375,8 @@ def test_encrypt_native_openssl_goldens(spark):
         assert got[0] == "c288822f72c23e3af45f2bf50572808e"
         assert got[2] == "9f3b7504926f8bd36e3118e903a4cd4a"
     assert all(len(v) % 32 == 0 for v in got.values())  # blockSize*2
-    # decrypt twin roundtrips
-    back = decrypt_fields_native(fn(df), ["source"], key_hex)
+    # the inverse round-trips
+    back = _decrypt_fields(fn(df), ["source"], key_hex)
     assert {r.id: r.source for r in back.collect()} == dict(enumerate(plaintexts))
     # Init-style validation: bad key/IV sizes raise like the Go Init
     import pytest as _pytest
