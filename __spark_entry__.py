@@ -198,7 +198,7 @@ def _q_topk_convs(spark: SparkSession, sf: str) -> DataFrame:
 def _q_spl_chain(spark: SparkSession, sf: str) -> DataFrame:
     """Driven from actual SPL TEXT through the front-end
     (ProcessorSPL.cpp:113-154, plans/spl.py): the piped string
-    compiles to parse-regexp (dissect fast path) → where → extend →
+    compiles to parse-regexp (one JVM match per row) → where → extend →
     project, identical output to the hand-written chain."""
     from ilogtail_spark.plans.spl import spl_transform
     from ilogtail_spark.sources.transcripts import GROK_PATTERN
@@ -681,14 +681,14 @@ def _q_split_explode(spark: SparkSession, sf: str) -> DataFrame:
 def _q_config_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """Config-driven assembly through the registry — the reference's
     YAML plugin-array-is-the-plan model (CollectionConfig.h:35-41):
-    dissect parse → inline dictmap enrich → full-match include filter
+    regex parse → inline dictmap enrich → full-match include filter
     → md5 lineage column, all by plugin name."""
     from ilogtail_spark.plans.pipeline import build_pipeline
     from ilogtail_spark.sources.transcripts import GROK_FIELDS, GROK_PATTERN
 
     chain = build_pipeline([
         {
-            "type": "processor_parse_dissect",
+            "type": "processor_parse_regex_native",
             "Regex": GROK_PATTERN,
             "Keys": GROK_FIELDS,
             "SourceKey": "text",
@@ -1052,7 +1052,7 @@ def _q_dictmap_csv(spark: SparkSession, sf: str) -> DataFrame:
     chain = build_pipeline(
         [
             {
-                "type": "processor_parse_dissect",
+                "type": "processor_parse_regex_native",
                 "Regex": GROK_PATTERN,
                 "Keys": GROK_FIELDS,
                 "SourceKey": "text",

@@ -6,8 +6,8 @@ patterns in order with a timeout
 (plugins/processor/grok/processor_grok.go:41-46,55,147-192,
 processor_grok_default_patterns.go). We reproduce the public grok
 dialect: expansion happens ONCE at the driver (pure Python), the
-compiled regex then runs JVM-side via parse_regex — grok never costs
-a UDF.
+compiled regex then runs JVM-side, one ``java.util.regex`` match per
+row (``operators/parse.py::parse_first_match``).
 
 Pattern definitions below are the standard public grok idioms
 (logstash-patterns-core, Apache-2.0 public corpus), restricted to
@@ -129,7 +129,7 @@ def compile_grok(
     # the user wrote (the Go grok lib compiles aliases to named
     # groups and the plugin emits named submatches only). Bare (...)
     # groups become non-capturing so emitted fields are exactly the
-    # capture groups, positionally — what parse_regex consumes.
+    # capture groups, positionally — what parse_first_match consumes.
     fields: list[str] = []
     out: list[str] = []
     in_class = False
@@ -182,7 +182,7 @@ def grok_parse(
     options=None,
 ):
     """processor_grok as a DataFrame transform: compile at the driver,
-    execute with parse_regex (JVM).
+    execute with one JVM match per row (``parse_first_match``).
 
     ``pattern`` may be an ORDERED LIST of grok expressions — the
     reference's Match semantics (processor_grok.go:147-192): patterns
@@ -192,80 +192,12 @@ def grok_parse(
     analogue — Catalyst regexes don't backtrack pathologically on the
     anchored idiom set and a stuck task is the cluster's speculative
     -execution concern, not per-row bookkeeping."""
-    from ilogtail_spark.operators.parse import parse_regex
+    from ilogtail_spark.operators.parse import parse_first_match
 
     pats = [pattern] if isinstance(pattern, str) else list(pattern)
-    if len(pats) == 1:
-        regex, fields, types = compile_grok(pats[0], custom_patterns)
-        # aliased captures are numbered in order of appearance; nested
-        # non-capturing groups don't shift numbering because expansion
-        # only emits (?:...) for unaliased refs
-        return parse_regex(df, regex, fields, source=source, types=types, options=options)
-    return _grok_parse_multi(df, pats, source, custom_patterns, options)
-
-
-def _grok_parse_multi(df, pats, source, custom_patterns, options):
-    """First-success-wins over an ordered pattern list, all JVM-side:
-    one rlike per pattern picks the winner, one regexp_extract per
-    (winning pattern, field). Everything is materialized through a
-    single struct column so the rlike chain isn't re-inlined into
-    every extracted field downstream."""
-    from pyspark.sql import functions as F
-
-    from ilogtail_spark.operators.parse import _apply_failure_contract, ParserOptions
-
-    compiled = [compile_grok(p, custom_patterns) for p in pats]
-    opts = options or ParserOptions()
-    src = F.col(source)
-
-    win = F.lit(-1)
-    for i in range(len(compiled) - 1, -1, -1):
-        win = F.when(src.isNotNull() & src.rlike(compiled[i][0]), F.lit(i)).otherwise(win)
-
-    union_fields: list[str] = []
-    for _, fields, _types in compiled:
-        for f in fields:
-            if f not in union_fields:
-                union_fields.append(f)
-    # a cast is only safe when EVERY pattern carrying the field
-    # declares the same type — otherwise an untyped pattern's string
-    # value would be force-cast to NULL when it wins; mixed fields
-    # stay strings (the reference's event model is all-string anyway)
-    union_types: dict[str, str] = {}
-    for f in union_fields:
-        declared = [
-            types.get(f) for _, fields, types in compiled if f in fields
-        ]
-        if all(d is not None and d == declared[0] for d in declared):
-            union_types[f] = declared[0]
-
-    struct_cols = [win.alias("__win")]
-    for f in union_fields:
-        expr = F.lit(None).cast("string")
-        # build in reverse so earlier patterns take precedence
-        for i in range(len(compiled) - 1, -1, -1):
-            regex, fields, _ = compiled[i]
-            if f in fields:
-                expr = F.when(
-                    F.col("_gw.__win") == i,
-                    F.regexp_extract(src, regex, fields.index(f) + 1),
-                ).otherwise(expr)
-        struct_cols.append(expr.alias(f))
-
-    # two-step: winner first (so field extraction references _gw.__win,
-    # not a re-inlined rlike chain), then the field values
-    out = df.withColumn("_gw", F.struct(win.alias("__win")))
-    field_struct = F.struct(
-        F.col("_gw.__win").alias("__win"), *struct_cols[1:]
+    return parse_first_match(
+        df, [compile_grok(p, custom_patterns) for p in pats], source, options
     )
-    out = out.withColumn("_gw", field_struct)
-    for f in union_fields:
-        col = F.col("_gw")[f]
-        if f in union_types:
-            col = col.cast(union_types[f])
-        out = out.withColumn(f, col)
-    out = _apply_failure_contract(out, source, F.col("_gw.__win") >= 0, opts)
-    return out.drop("_gw")
 
 
 from ilogtail_spark.operators.registry import register  # noqa: E402

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Build ilogtail-jvm.jar, the JVM side of ilogtail_spark (the file://
-# filesystem, the SLS LogGroup codec and the native timestamp parser),
+# filesystem, the SLS LogGroup codec, the native timestamp parser and
+# the regex match),
 # from every .java file in this directory against the Spark and Hadoop
 # classes bundled with pyspark.
 # The output is reproducible: class files for Java 17, fixed entry dates,

@@ -11,81 +11,38 @@ of the 4-line stub_status page is the liftable semantics:
 
 All seven fields are emitted as STRINGS (the reference keeps them as
 the raw tokens in a ``map[string]string``). Malformed pages yield
-NULL fields rather than task failure. One codegen pass, zero
+NULL fields rather than task failure. One JVM match per row, zero
 shuffle."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_ACTIVE_RE = r"Active connections:\s*(\d+)"
-# the line AFTER the 'server accepts handled requests' header
-_AHR_RE = r"server accepts handled requests\s*\n\s*(\d+)\s+(\d+)\s+(\d+)"
-_RWW_RE = r"Reading:\s*(\d+)\s+Writing:\s*(\d+)\s+Waiting:\s*(\d+)"
+from ilogtail_spark.operators.parse import regex_match
 
-# same 3-control-char sentinel as operators/parse.py's one-pass idiom:
-# no machine-generated status page emits RS+GS+US
-_SEP = "\x1e\x1d\x1f"
-
-
-def _onepass3(page: Column, pat: str) -> Column:
-    """One regex run extracting all 3 groups: replace the FIRST match
-    (lazy ``^[\\s\\S]*?`` prefix pins the single replacement at offset
-    0; the greedy ``[\\s\\S]*`` tail consumes the rest so exactly one
-    replacement fires) with the sentinel-joined group refs, then a
-    structural split. Miss -> the page passes through unchanged as ONE
-    (sentinel-free) part. Rows carrying the sentinel fall back to the
-    per-group path (NULL branch in the caller)."""
-    rep = _SEP.join(f"${i}" for i in (1, 2, 3))
-    return F.when(
-        page.isNotNull() & ~page.contains(_SEP),
-        F.split(
-            F.regexp_replace(page, f"^[\\s\\S]*?(?:{pat})[\\s\\S]*", rep),
-            _SEP,
-            -1,
-        ),
-    )
+# The three lines as independent optional lookaheads from the start of
+# the page: each takes the first match of its line anywhere (the lazy
+# prefix tries the leftmost start first, as `find` does), and a line
+# that is missing leaves its groups NULL without failing the others.
+_STATUS_RE = (
+    r"\A(?:(?=[\s\S]*?Active connections:\s*(\d+)))?"
+    # the line AFTER the 'server accepts handled requests' header
+    r"(?:(?=[\s\S]*?server accepts handled requests\s*\n\s*(\d+)\s+(\d+)\s+(\d+)))?"
+    r"(?:(?=[\s\S]*?Reading:\s*(\d+)\s+Writing:\s*(\d+)\s+Waiting:\s*(\d+)))?"
+)
+_FIELDS = ["active", "accepts", "handled", "requests", "reading", "writing", "waiting"]
 
 
 def nginx_status_parse(df: DataFrame, source_col: str = "page") -> DataFrame:
     """Parse a stub_status page column into the reference's seven
     fields (input_nginx.go:160-168): active, accepts, handled,
     requests, reading, writing, waiting — raw numeric tokens as
-    strings. Non-matching pattern (page malformed) -> NULL for that
-    pattern's fields; the three patterns stay independent, matching
-    the reference's per-line extraction.
-
-    Each multi-group pattern runs ONCE per row via the parse.py
-    one-pass sentinel idiom (a per-group regexp_extract is a distinct
-    expression codegen does not dedupe — that was 3 runs each for
-    _AHR_RE/_RWW_RE); the arrays materialize in their own projection
-    so downstream element_at reads are not re-inlined."""
-    page = F.col(source_col)
-    out = df.withColumns(
-        {"_ahr": _onepass3(page, _AHR_RE), "_rww": _onepass3(page, _RWW_RE)}
-    )
-
-    def pick(arr_name: str, pat: str, i: int) -> Column:
-        arr = F.col(arr_name)
-        return (
-            F.when(
-                arr.isNotNull() & (F.size(arr) == 3), F.element_at(arr, i)
-            )
-            # sentinel-free MISS: NULL without re-running the regex
-            .when(arr.isNotNull(), F.lit(None).cast("string"))
-            # sentinel-carrying page: per-group fallback, '' -> NULL
-            .otherwise(F.nullif(F.regexp_extract(page, pat, i), F.lit("")))
-        )
-
+    strings. A line the page lacks (malformed page) leaves NULL for
+    its fields; the three lines stay independent, matching the
+    reference's per-line extraction. One JVM match per row
+    (``parse.regex_match``)."""
+    out = regex_match(df, source_col, [_STATUS_RE])
     return out.withColumns(
-        {
-            "active": F.nullif(F.regexp_extract(page, _ACTIVE_RE, 1), F.lit("")),
-            "accepts": pick("_ahr", _AHR_RE, 1),
-            "handled": pick("_ahr", _AHR_RE, 2),
-            "requests": pick("_ahr", _AHR_RE, 3),
-            "reading": pick("_rww", _RWW_RE, 1),
-            "writing": pick("_rww", _RWW_RE, 2),
-            "waiting": pick("_rww", _RWW_RE, 3),
-        }
-    ).drop("_ahr", "_rww")
+        {name: F.get(F.col("_rx.g"), i) for i, name in enumerate(_FIELDS)}
+    ).drop("_rx")

@@ -22,10 +22,14 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
+from ilogtail_spark.common import sql_ident, sql_str
 from ilogtail_spark.operators.registry import cfg_pop, register
+from ilogtail_spark.session import java_udf
 
 RAW_LOG_KEY = "__raw_log__"
 PARSE_OK_KEY = "__parse_ok__"
@@ -68,56 +72,119 @@ def _apply_failure_contract(
 
 
 # ---------------------------------------------------------------------------
-# regex / grok
+# regex / grok: one JVM match per row
 # ---------------------------------------------------------------------------
 
-# One-pass multi-group extraction: a 3-control-char sentinel no log
-# format emits (RS+GS+US). Rows whose SOURCE contains it take the
-# per-group fallback branch, so the trick is correctness-neutral.
-_ONEPASS_SEP = "\x1e\x1d\x1f"
+_MATCH_UDF = (
+    "ilogtail_regex_match",
+    "ilogtail.spark.regex.RegexMatch",
+    StructType([
+        StructField("i", IntegerType()),
+        StructField("g", ArrayType(StringType())),
+    ]),
+)
 
 
-def _onepass_eligible(pat: str, nfields: int, ngroups: int | None) -> bool:
-    """The single-regexp_replace extraction is sound only when the
-    pattern is START-ANCHORED for every alternative: then the (one)
-    match begins at offset 0, ``(?:pat)[\\s\\S]*`` consumes the whole
-    string, and the replacement IS exactly the joined groups.  Gate:
-    starts with ``^``/``\\A`` (optionally after inline flags without
-    ``m``, which re-binds ``^``), no top-level ``|`` (only the first
-    alternative would inherit the anchor), group count known and
-    sufficient (Python-compilable dialect), ≥2 fields (one field gains
-    nothing over regexp_extract)."""
-    import re as _re
+def _group_count(spark, pattern: str) -> int:
+    """The capture-group count of ``pattern`` as ``java.util.regex``
+    compiles it, on the driver: a pattern that does not compile raises
+    a ``ValueError`` naming it before any Spark job runs."""
+    java_udf(spark, *_MATCH_UDF)  # raises naming the jar when it is missing
+    try:
+        return spark._jvm.ilogtail.spark.regex.RegexMatch.groupCount(pattern)
+    except IllegalArgumentException as err:  # PatternSyntaxException
+        raise ValueError(f"invalid regex {pattern!r}: {err}") from None
 
-    if nfields < 2 or ngroups is None or ngroups < nfields:
-        return False
-    rest = pat
-    m = _re.match(r"^\(\?([a-zA-Z]+)\)", pat)
-    if m:
-        if "m" in m.group(1).lower():
-            return False
-        rest = pat[m.end():]
-    if not (rest.startswith("^") or rest.startswith("\\A")):
-        return False
-    # top-level alternation scan (escape- and class- and group-aware)
-    depth, i, in_class = 0, 0, False
-    while i < len(pat):
-        c = pat[i]
-        if c == "\\":
-            i += 2
-            continue
-        if in_class:
-            in_class = c != "]"
-        elif c == "[":
-            in_class = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "|" and depth == 0:
-            return False
-        i += 1
-    return True
+
+def _match_call(fn: str, source: str, patterns: list[str]) -> str:
+    return f"{fn}({sql_ident(source)}, array({', '.join(sql_str(p) for p in patterns)}))"
+
+
+def regex_match(df: DataFrame, source: str, patterns: list[str], out: str = "_rx") -> DataFrame:
+    """Add the column ``out``: ``struct<i int, g array<string>>`` of the
+    first of ``patterns`` that ``find``s a match in the string column
+    ``source`` (its index and groups, NULL for a group that did not
+    take part), NULL when none does. ``jvm/RegexMatch.java`` runs once
+    per row.
+
+    The call sits in one projection under an ``explode(array(..))``.
+    PushDownPredicates substitutes a projected expression into each
+    predicate pushed below its projection, so a downstream filter on a
+    parsed field would run the match again per row. A Generate is not
+    a predicate: filters on ``out`` stay above it, while filters on
+    other columns still reach the scan."""
+    fn = java_udf(df.sparkSession, *_MATCH_UDF)
+    d = df.withColumn(f"{out}_m", F.expr(_match_call(fn, source, patterns)))
+    return d.withColumn(out, F.explode(F.array(F.col(f"{out}_m")))).drop(f"{out}_m")
+
+
+def parse_first_match(
+    df: DataFrame,
+    alternatives: list[tuple[str, list[str], dict[str, str]]],
+    source: str = "text",
+    options: ParserOptions | None = None,
+) -> DataFrame:
+    """Parse ``source`` with the first of the ordered ``(pattern, Keys,
+    types)`` alternatives that matches (one is processor_parse_regex;
+    several are grok's Match list, processor_grok.go:147-192). The
+    output columns are the union of every alternative's Keys; a Key the
+    winner does not carry is NULL.
+
+    Go's regex processor appends only the groups that took part in the
+    match (regex.go:121-127), so among duplicate Keys the last
+    participating group wins; a Key none of whose groups took part is
+    ``""`` on a match (Java's ``regexp_extract`` value). A pattern with
+    fewer groups than Keys fails every row (regex.go:115-120). A field
+    is cast only when every alternative carrying it declares the same
+    type: an untyped winner's value must not be cast to NULL.
+    """
+    opts = options or ParserOptions()
+    spark = df.sparkSession
+    # a dead alternative (fewer groups than Keys) is left out of the call
+    live = [
+        (p, keys) for p, keys, _ in alternatives
+        if _group_count(spark, p) >= len(keys)
+    ]
+    names = list(dict.fromkeys(k for _, keys, _ in alternatives for k in keys))
+    # overwriting the source column (a Key named like SourceKey) must
+    # not corrupt the failure contract's raw-source read
+    stash = source in names
+    if live:
+        out = regex_match(df, source, [p for p, _ in live])
+    else:
+        out = df.withColumn("_rx", F.lit(None).cast(_MATCH_UDF[2]))
+    # nullable in form, never NULL: the written parquet schema keeps the
+    # optional __parse_ok__ that the rlike-based flag gave it
+    ok = F.when(F.col("_rx").isNotNull(), F.col("_rx.i") >= 0).otherwise(F.lit(False))
+    if stash:
+        out = out.withColumn("_rx_src", F.col(source))
+    for name in names:
+        col = F.lit(None).cast("string")
+        for k in range(len(live) - 1, -1, -1):
+            idxs = [j for j, n in enumerate(live[k][1]) if n == name]
+            if idxs:
+                val = F.coalesce(*[F.get(F.col("_rx.g"), j) for j in reversed(idxs)], F.lit(""))
+                col = F.when(F.col("_rx.i") == k, val).otherwise(col)
+        declared = [t.get(name) for _, keys, t in alternatives if name in keys]
+        if declared[0] is not None and declared.count(declared[0]) == len(declared):
+            col = col.cast(declared[0])
+        if name in df.columns and name != source:
+            # chained parse stages: a FAILED parse appends nothing in
+            # the reference's flat KV bag (regex.go:106-128) — an
+            # earlier stage's extraction must survive, not be NULLed
+            col = F.when(ok, col).otherwise(F.col(name))
+        out = out.withColumn(name, col)
+    out = _apply_failure_contract(out, "_rx_src" if stash else source, ok, opts)
+    if stash:
+        # Go keeps the RAW source KV on parse failure even when a Key
+        # shadows SourceKey (shouldKeepSource, regex.go KeepSource /
+        # KeepSourceIfParseError) — restore it from the stash
+        if opts.keep_source_if_fail and not opts.discard_unmatch:
+            out = out.withColumn(
+                source, F.when(ok, F.col(source)).otherwise(F.col("_rx_src"))
+            )
+        out = out.drop("_rx_src")
+    return out.drop("_rx")
 
 
 def parse_regex(
@@ -135,338 +202,13 @@ def parse_regex(
     plugins/processor/regex/regex.go:105-129. Capture groups map to
     ``fields`` in order; ``types`` optionally casts a field (grok's
     int/float annotations, plugins/processor/grok/processor_grok.go:41-46).
-
-    Plan: one ``rlike`` for the match flag + one ``regexp_extract``
-    per group — all JVM expressions inside a single codegen stage; no
-    shuffle, fully pushdown-friendly.
+    One JVM match per row (:func:`parse_first_match`).
     """
-    opts = options or ParserOptions()
-    types = types or {}
     # \A/\z: ABSOLUTE anchors — a caller-supplied inline (?m) must not
     # let the closing anchor bind to an embedded line end (regex_match
     # semantics, ProcessorParseRegexNative.cpp:194)
     pat = rf"\A(?:{pattern})\z" if full_match else pattern
-    # Go treats fewer capture groups than Keys as parse FAILURE for
-    # every row (regex.go:115-120), not a config error — count groups
-    # at plan time (Python re over the common dialect; Java-only
-    # syntax skips the check and lets Spark validate indices)
-    try:
-        import re as _re
-
-        ngroups = _re.compile(pattern).groups
-    except _re.error:
-        ngroups = None
-    always_fail = ngroups is not None and ngroups < len(fields)
-    if always_fail:
-        ok = F.lit(False)
-    else:
-        ok = F.col(source).isNotNull() & F.col(source).rlike(pat)
-    # overwriting the source column (a Key named like SourceKey) must
-    # not corrupt the failure contract's raw-source read
-    stash = source in fields
-    if not always_fail and _onepass_eligible(pat, len(fields), ngroups):
-        # ONE regex execution extracts every group: replace the (single,
-        # offset-0, whole-string) match of (?:pat)[\s\S]* with the
-        # sentinel-joined group refs, then a structural split. 2 regex
-        # runs per row (rlike + replace) instead of 1 + per-group; on
-        # the SplBenchmark 20-group nginx pattern that is ~8x. Rows
-        # carrying the sentinel (or failing the match) fall back to
-        # regexp_extract per group — semantics identical either way
-        # (Java inserts "" for a non-participating $n, exactly what
-        # regexp_extract returns for a non-participating group).
-        rep = _ONEPASS_SEP.join(f"${i + 1}" for i in range(len(fields)))
-        arr = F.when(
-            F.col(source).isNotNull() & ~F.col(source).contains(_ONEPASS_SEP),
-            F.split(
-                F.regexp_replace(F.col(source), f"(?:{pat})[\\s\\S]*", rep),
-                _ONEPASS_SEP,
-                -1,
-            ),
-        )
-        # the array lands ALONE in its own projection: a column used by
-        # the next projection is materialized exactly once, whereas
-        # subexpressions under different conditional branches are NOT
-        # deduplicated by codegen (this was 3 replace runs per row)
-        out = df.withColumn("_rxa", arr)
-        arr0 = F.col("_rxa")
-        # the replace output IS the match flag: pat is start-anchored,
-        # so the wrapped pattern matches iff pat does, and a fired
-        # replace yields exactly len(fields) sentinel-joined parts
-        # while a miss passes the (sentinel-free) source through as
-        # ONE part — no separate rlike, ONE regex run per row. Only
-        # sentinel-carrying rows pay the rlike fallback.
-        ok0 = F.when(
-            arr0.isNotNull(), F.size(arr0) == F.lit(len(fields))
-        ).otherwise(ok)
-        struct_fields = [ok0.alias("__ok")]
-        for i in range(len(fields)):
-            # the match flag guards BOTH branches: a non-matching row's
-            # arr is the size-1 passthrough (element_at would be out of
-            # bounds under ANSI), and extraction on failure must yield
-            # NULL. size==len check inlined (cheap on the materialized
-            # array) rather than reusing ok0 (a CaseWhen that codegen
-            # would re-evaluate per field).
-            col = (
-                F.when(
-                    arr0.isNotNull() & (F.size(arr0) == F.lit(len(fields))),
-                    F.element_at(arr0, i + 1),
-                )
-                # sentinel-free MISS: NULL without touching the regex
-                # again (falling through to the rlike branch would
-                # re-run the pattern on every non-matching row)
-                .when(arr0.isNotNull(), F.lit(None).cast("string"))
-                .otherwise(
-                    F.when(ok, F.regexp_extract(F.col(source), pat, i + 1))
-                )
-            )
-            struct_fields.append(col.alias(f"g{i}"))
-        out = out.withColumn("_rx", F.struct(*struct_fields)).drop("_rxa")
-    else:
-        # struct-materialized like parse_dissect: keeps the rlike from
-        # being re-inlined into every extracted column downstream
-        struct_fields = [ok.alias("__ok")]
-        for i, name in enumerate(fields):
-            if always_fail:
-                # regexp_extract validates the group index at analysis —
-                # emit NULLs outright for the Go fewer-groups failure mode
-                col = F.lit(None).cast("string")
-            else:
-                col = F.when(ok, F.regexp_extract(F.col(source), pat, i + 1))
-            struct_fields.append(col.alias(f"g{i}"))
-        out = df.withColumn("_rx", F.struct(*struct_fields))
-    if stash:
-        out = out.withColumn("_rx_src", F.col(source))
-    seen = []
-    for name in fields:
-        if name in seen:
-            continue
-        seen.append(name)
-        idxs = [i for i, n in enumerate(fields) if n == name]
-        if len(idxs) == 1:
-            col = F.col(f"_rx.g{idxs[0]}")
-        else:
-            # duplicate Keys (alternation branches, e.g. user_contrib/
-            # vivado-synth-log.md): Go appends only PARTICIPATING
-            # groups (regex.go:121-127) — Java regexp_extract returns
-            # "" for a non-participating group, so the last non-empty
-            # branch wins, falling back to "" on a match. Documented
-            # deviation: a PARTICIPATING empty capture (e.g. \w* that
-            # matched nothing) is indistinguishable from a skipped
-            # branch here, so an earlier branch's value wins where Go
-            # would resolve to "" — java.util.regex offers no
-            # participation signal
-            col = F.coalesce(
-                *[F.nullif(F.col(f"_rx.g{i}"), F.lit("")) for i in reversed(idxs)]
-            )
-            col = F.when(F.col("_rx.__ok"), F.coalesce(col, F.lit(""))).otherwise(col)
-        if name in types:
-            col = col.cast(types[name])
-        if name in df.columns and name != source:
-            # chained parse stages: a FAILED parse appends nothing in
-            # the reference's flat KV bag (regex.go:106-128) — an
-            # earlier stage's extraction must survive, not be NULLed
-            col = F.when(F.col("_rx.__ok"), col).otherwise(F.col(name))
-        out = out.withColumn(name, col)
-    out = _apply_failure_contract(
-        out, "_rx_src" if stash else source, F.col("_rx.__ok"), opts
-    )
-    if stash:
-        # Go keeps the RAW source KV on parse failure even when a Key
-        # shadows SourceKey (shouldKeepSource, regex.go KeepSource /
-        # KeepSourceIfParseError) — restore it from the stash
-        if opts.keep_source_if_fail and not opts.discard_unmatch:
-            out = out.withColumn(
-                source,
-                F.when(F.col("_rx.__ok"), F.col(source)).otherwise(
-                    F.col("_rx_src")
-                ),
-            )
-        out = out.drop("_rx_src")
-    return out.drop("_rx")
-
-
-# ---------------------------------------------------------------------------
-# dissect (structural single-pass parse for anchor-separated patterns)
-# ---------------------------------------------------------------------------
-
-_WORD_CHARS = (
-    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_"
-)
-
-_CLASS_CHECKS = {
-    # regex char-class -> structural validator (no java.util.regex in
-    # the hot path; translate / instr are plain codegen string ops)
-    "word": lambda c: (F.length(c) > 0) & (F.length(F.translate(c, _WORD_CHARS, "")) == 0),
-    "digits": lambda c: (F.length(c) > 0) & (F.length(F.translate(c, "0123456789", "")) == 0),
-    "nospace": lambda c: (F.length(c) > 0) & (F.instr(c, " ") == 0),
-}
-
-_TOKEN_CLASS = {r"\w+": "word", r"\d+": "digits", r"\S+": "nospace", r'[^"\s]+': "nospace"}
-
-# char-membership test per raw capture token — used at compile time to
-# reject patterns where an anchor's first char could be consumed by the
-# preceding capture (first-occurrence carving would then diverge from
-# regex backtracking semantics)
-_TOKEN_MEMBER = {
-    r"\w+": lambda ch: ch in _WORD_CHARS,
-    r"\d+": lambda ch: ch in "0123456789",
-    r"\S+": lambda ch: not ch.isspace(),
-    r'[^"\s]+': lambda ch: ch != '"' and not ch.isspace(),
-}
-
-
-def compile_dissect(pattern: str) -> list[tuple[str, str | None, str]] | None:
-    """Compile a regex into a dissect plan when possible.
-
-    A dissect plan is ``[(leading_literal, field_slot, char_class),
-    ..., (trailing_literal, None, "")]`` — valid only when the pattern
-    strictly alternates non-empty literals with simple captures
-    ``(\\w+) (\\d+) (\\S+) ([^"\\s]+)``: the shape of delimiter-anchored
-    log formats (the reference's delimiter-parser territory,
-    core/plugin/processor/ProcessorParseDelimiterNative.cpp:186-206).
-    Returns None when the pattern needs a real regex engine, in which
-    case callers fall back to :func:`parse_regex`.
-    """
-    import re as _re
-
-    cap = _re.compile(r"\((\\w\+|\\d\+|\\S\+|\[\^\"\\s\]\+)\)")
-    tokens: list[tuple[str, str | None, str]] = []
-    raws: list[str] = []
-    lit = ""
-    i = 0
-    group = 0
-    while i < len(pattern):
-        m = cap.match(pattern, i)
-        if m:
-            if not lit and tokens:
-                return None  # adjacent captures: ambiguous without regex
-            cls = _TOKEN_CLASS.get(m.group(1))
-            if cls is None:
-                return None
-            tokens.append((lit, f"g{group}", cls))
-            raws.append(m.group(1))
-            group += 1
-            lit = ""
-            i = m.end()
-            continue
-        ch = pattern[i]
-        if ch == "\\" and i + 1 < len(pattern):
-            nxt = pattern[i + 1]
-            if nxt in '"\\/.+*?()[]{}|^$':
-                lit += nxt
-                i += 2
-                continue
-            return None  # \w outside a capture etc.
-        if ch in ".+*?()[]{}|^$":
-            return None  # bare metacharacter: not a literal
-        lit += ch
-        i += 1
-    if not tokens:
-        return None
-    tokens.append((lit, None, ""))
-    # regex-equivalence guard: if the anchor following a capture starts
-    # with a char the capture's class could consume, greedy regex and
-    # first-occurrence carving disagree — bail to the regex engine
-    for idx, raw in enumerate(raws):
-        follow = tokens[idx + 1][0]
-        if follow and _TOKEN_MEMBER[raw](follow[0]):
-            return None
-    return tokens
-
-
-def parse_dissect(
-    df: DataFrame,
-    pattern: str,
-    fields: list[str],
-    source: str = "text",
-    types: dict[str, str] | None = None,
-    options: ParserOptions | None = None,
-) -> DataFrame:
-    """Single-pass structural parse for anchor-separated patterns —
-    same output contract as :func:`parse_regex` on the same pattern
-    and data (oracle-verified), ~10x faster per row.
-
-    Each field is carved between its literal anchors with locate +
-    substring (first-occurrence anchoring), then validated against its
-    char class with translate/instr — all whole-stage codegen, no
-    java.util.regex (which on this substrate stops scaling past ~8
-    threads). Known deviation from regex `find` semantics: when a
-    match could only start at the SECOND occurrence of the first
-    anchor (e.g. "tool=a tool=b status=1"), regex backtracks and
-    matches while dissect reports failure; delimiter-anchored log
-    formats never produce that shape (and the reference's own
-    delimiter parser has the same first-occurrence behavior).
-    """
-    opts = options or ParserOptions()
-    types = types or {}
-    plan = compile_dissect(pattern)
-    if plan is None:
-        return parse_regex(df, pattern, fields, source, types, options)
-
-    captures = [t for t in plan if t[1] is not None]
-    if len(captures) != len(fields):
-        raise ValueError(f"dissect: {len(captures)} captures != {len(fields)} fields")
-
-    # Position-based carving: p_i = locate(anchor_i, src, p_{i-1}+len)
-    # chains LINEARLY (each position references the previous one
-    # exactly once), so even when Catalyst's filter pushdown
-    # substitutes the whole chain into a single predicate the
-    # expression stays a few hundred nodes. The naive formulation —
-    # peeling a "rest of the string" per level — embeds the previous
-    # level's subtree 3× per step (locate + substring + length): 3^N
-    # nodes after pushdown, a megabytes-large physical plan, and a
-    # 50× slowdown on filter(__parse_ok__) before this fix.
-    src = F.col(source)
-    out = df
-    lens: list[int] = []
-    # positions land in real columns _dp{i}: downstream projections
-    # that reference several parsed fields then inline only tiny
-    # substring(src, _dp_i + c, _dp_j - _dp_i - c) expressions instead
-    # of re-expanding the whole locate chain per field (was a 170 KB
-    # plan for any query touching 2+ fields)
-    for i, (lead, _slot, _cls) in enumerate(plan[:-1]):
-        if i == 0:
-            p = F.locate(lead, src)
-        else:
-            # F.locate only takes an int start; the SQL function form
-            # accepts a column expression
-            p = F.call_function(
-                "locate", F.lit(lead), src, F.col(f"_dp{i - 1}") + lens[-1]
-            )
-        out = out.withColumn(f"_dp{i}", p)
-        lens.append(len(lead))
-
-    vals: list[Column] = []
-    ok = src.isNotNull()
-    for i, (lead, _slot, cls) in enumerate(plan[:-1]):
-        start = F.col(f"_dp{i}") + lens[i]
-        if i + 1 < len(plan) - 1:
-            end = F.col(f"_dp{i + 1}")  # located from `start`, so ≥ start or 0
-            val = F.substring(src, start, end - start)
-        elif plan[-1][0]:
-            # trailing literal must EXIST after the capture, else the
-            # parse fails (regex would fail too) — substring_index's
-            # return-whole-tail-when-absent behavior was a silent
-            # false-positive here
-            nxt = plan[-1][0]
-            tpos = F.call_function("locate", F.lit(nxt), src, start)
-            val = F.substring(src, start, tpos - start)
-            ok = ok & (tpos > 0)
-        else:
-            tail = F.substring(src, start, F.length(src))
-            # trailing capture with no anchor: stops at next whitespace
-            val = F.substring_index(tail, " ", 1)
-        vals.append(val)
-        ok = ok & (F.col(f"_dp{i}") > 0) & _CLASS_CHECKS[cls](val)
-
-    out = out.withColumn("_dok", ok)
-    for fname, val in zip(fields, vals):
-        col = F.when(F.col("_dok"), val)
-        if fname in types:
-            col = col.cast(types[fname])
-        out = out.withColumn(fname, col)
-    out = _apply_failure_contract(out, source, F.col("_dok"), opts)
-    return out.drop("_dok", *[f"_dp{i}" for i in range(len(plan) - 1)])
+    return parse_first_match(df, [(pat, fields, types or {})], source, options)
 
 
 # ---------------------------------------------------------------------------
@@ -901,8 +643,7 @@ def split_key_value(
 
     One ``aggregate`` over the split pairs builds (entries, counters)
     as a struct fold — higher-order JVM expressions, no UDF, no
-    shuffle. :func:`parse_kv` stays the fast path when no quote or
-    anomaly handling is configured (plain ``str_to_map``).
+    shuffle.
     """
     opts = options or ParserOptions()
     src = F.col(source)
@@ -1610,17 +1351,12 @@ def _kv_factory(**cfg):
     discard_no_sep = cfg_pop(
         cfg, "DiscardWhenSeparatorNotFound", "discard_no_sep", default=False
     )
-    has_prefix_cfg = "EmptyKeyPrefix" in cfg or "NoSeparatorKeyPrefix" in cfg
     empty_prefix = cfg_pop(cfg, "EmptyKeyPrefix", default="empty_key_")
     no_sep_prefix = cfg_pop(cfg, "NoSeparatorKeyPrefix", default="no_separator_key_")
-    if quote or discard_no_sep or has_prefix_cfg:
-        return lambda df: split_key_value(
-            df, source=source, pair_sep=pair_sep, kv_sep=kv_sep, quote=quote,
-            empty_key_prefix=empty_prefix, no_sep_key_prefix=no_sep_prefix,
-            discard_no_sep=discard_no_sep, options=opts,
-        )
-    return lambda df: parse_kv(
-        df, source=source, pair_sep=pair_sep, kv_sep=kv_sep, options=opts
+    return lambda df: split_key_value(
+        df, source=source, pair_sep=pair_sep, kv_sep=kv_sep, quote=quote,
+        empty_key_prefix=empty_prefix, no_sep_key_prefix=no_sep_prefix,
+        discard_no_sep=discard_no_sep, options=opts,
     )
 
 
@@ -1714,22 +1450,6 @@ def _apsara_factory(**cfg):
     source = cfg_pop(cfg, "SourceKey", "source", default="text")
     tz = cfg_pop(cfg, "Timezone", "timezone", default=None)
     return lambda df: parse_apsara(df, source=source, options=opts, timezone=tz)
-
-
-@register("processor_parse_dissect")
-def _dissect_factory(**cfg):
-    """Structural single-pass variant of the regex parser for
-    anchor-separated patterns (falls back to regex when the pattern
-    doesn't compile to a dissect plan). Config resolves eagerly so the
-    built transform is reusable across DataFrames."""
-    opts = _opts_from_config(cfg)
-    pattern = cfg_pop(cfg, "Regex", "pattern")
-    fields = cfg_pop(cfg, "Keys", "fields")
-    source = cfg_pop(cfg, "SourceKey", "source", default="text")
-    types = cfg.pop("types", None)
-    return lambda df: parse_dissect(
-        df, pattern, fields, source=source, types=types, options=opts
-    )
 
 
 def parse_container_log(

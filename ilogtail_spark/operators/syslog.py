@@ -87,14 +87,13 @@ def _sd_json(sd: Column) -> Column:
     return F.concat(F.lit("{"), F.array_join(elems, ","), F.lit("}"))
 
 
-_SEP = "\x1e\x1d\x1f"  # parse.py's one-pass sentinel (no log format emits it)
+_SEP = "\x1e\x1d\x1f"  # the one-pass sentinel (RS+GS+US; no log format emits it)
 
 
 def _grp(arr_col: str, line: Column, pat: str, n: int, i: int) -> Column:
     """Group ``i`` from the materialized one-pass array: element when
     the replace fired (size == n), NULL on a sentinel-free miss, exact
-    per-group fallback for (rare) sentinel-carrying rows — the
-    parse.py one-pass contract."""
+    per-group fallback for (rare) sentinel-carrying rows."""
     a = F.col(arr_col)
     return (
         F.when(a.isNotNull() & (F.size(a) == n), F.element_at(a, i))
@@ -123,7 +122,7 @@ def syslog_parse(
     Perf shape: each grammar costs ONE regex run per row — the
     start-anchored pattern extracts every group via a single
     sentinel-joined regexp_replace materialized in its own projection
-    (parse.py's one-pass idiom; per-group regexp_extract under
+    (per-group regexp_extract under
     conditional branches is NOT deduplicated by codegen and would run
     the pattern ~15x per row). Calendar-invalid RFC3164 fields (Feb
     30, hour 99) fail via try_make_timestamp into the normal

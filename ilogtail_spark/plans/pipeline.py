@@ -31,7 +31,6 @@ from ilogtail_spark.operators.parse import (
     PARSE_OK_KEY,
     RAW_LOG_KEY,
     ParserOptions,
-    parse_dissect,
     parse_regex,
 )
 from ilogtail_spark.operators.route import Route, route_multicast
@@ -115,20 +114,18 @@ def build_pipeline(config: list[dict]):
     return run
 
 
-def parse_stage(df: DataFrame, engine: str = "dissect") -> DataFrame:
+def parse_stage(df: DataFrame, engine: str = "native") -> DataFrame:
     """Grok/regex dissection of each turn's text: tool invocations,
     status, latency tokens, method/url, error codes. CommonParserOptions
     failure contract (__raw_log__ + __parse_ok__).
 
-    The one flagship engine is dissect: the grok pattern compiles to a
-    single-pass structural plan, oracle-identical to the regex, and
-    ``parse_dissect`` falls back to the regex for a pattern it cannot
-    compile. ``engine="native"`` (the JVM regex) exists only for the
-    benchmark's parse-engine comparison rung; no product caller
-    passes it."""
+    The one engine is ``parse_regex``: one JVM match per row. The
+    benchmark's parse ladder still names it ``"dissect"`` and
+    ``"native"``; both are accepted and any other name raises."""
+    if engine not in ("dissect", "native"):
+        raise ValueError(f"unknown parse engine {engine!r}; there is one regex engine")
     opts = ParserOptions(keep_source=True, keep_source_if_fail=True)
-    fn = {"dissect": parse_dissect, "native": parse_regex}[engine]
-    return fn(
+    return parse_regex(
         df, GROK_PATTERN, GROK_FIELDS, source="text", types=PARSE_TYPES, options=opts
     )
 

@@ -331,11 +331,9 @@ def _stage_parse_regexp(rest: str) -> Transform:
     fields = [c.strip() for c in _split_top(m.group(3), ",")]
 
     def run(df):
-        from ilogtail_spark.operators.parse import parse_dissect
+        from ilogtail_spark.operators.parse import parse_regex
 
-        # dissect-compilable patterns take the structural fast path,
-        # everything else falls back to the regex engine inside
-        return parse_dissect(
+        return parse_regex(
             df, pat, fields, source=col, options=ParserOptions(keep_source=True)
         )
 

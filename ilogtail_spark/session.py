@@ -19,8 +19,9 @@ from pyspark.sql.types import DataType
 # The JVM side of the engine (sources and build script in ``jvm/``):
 # Hadoop's local filesystem, setting permissions without a forked
 # ``chmod`` per written file, for ``FileSystem`` and ``FileContext``
-# callers; the SLS LogGroup codec (``operators/pb.py``); and the native
-# timestamp parser (``operators/strptime_native.py``)
+# callers; the SLS LogGroup codec (``operators/pb.py``); the native
+# timestamp parser (``operators/strptime_native.py``); and the regex
+# match every regex parser runs (``RegexMatch``, ``operators/parse.py``)
 JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "ilogtail-jvm.jar")
 LOCAL_FS_CLASS = "ilogtail.spark.fs.NioLocalFileSystem"
 LOCAL_FS_CONTEXT_CLASS = "ilogtail.spark.fs.NioLocalFs"

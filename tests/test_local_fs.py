@@ -276,7 +276,7 @@ def test_committed_jar_is_rebuilt_byte_for_byte(tmp_path):
 
     committed = classes(JVM_JAR)
     assert {n.split("/")[-1].split("$")[0].removesuffix(".class") for n in committed} == {
-        "NioLocalFileSystem", "NioLocalFs", "SlsLogGroup", "Strptime",
+        "NioLocalFileSystem", "NioLocalFs", "RegexMatch", "SlsLogGroup", "Strptime",
     }
     assert (tmp_path / "ilogtail-jvm.jar").read_bytes() == open(JVM_JAR, "rb").read()
     assert classes(tmp_path / "ilogtail-jvm.jar") == committed

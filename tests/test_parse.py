@@ -12,6 +12,7 @@ from ilogtail_spark.operators.parse import (
     ParserOptions,
     parse_delimiter,
     parse_json,
+    parse_first_match,
     parse_kv,
     parse_regex,
     parse_timestamp,
@@ -103,33 +104,68 @@ def test_parse_timestamp_tz(spark):
     assert out["ts"].isoformat() == "2024-03-01T02:20:30"  # UTC+8 shifted
 
 
-def test_dissect_trailing_literal_required(spark):
+def test_regex_trailing_literal_required(spark):
     """Pattern ending in a literal: the literal must exist after the
-    capture or the parse fails (matches regex; was a silent false
-    positive via substring_index's whole-tail fallback)."""
-    from ilogtail_spark.operators.parse import compile_dissect, parse_dissect
-
-    pat = r"user=(\w+) x"
-    assert compile_dissect(pat) is not None
+    capture or the parse fails."""
     df = _df(spark, ["user=alice x", "user=bob", "user=carol y"])
-    out = parse_dissect(df, pat, ["u"]).orderBy("id").collect()
-    ref = parse_regex(df, pat, ["u"]).orderBy("id").collect()
-    for o, r in zip(out, ref):
-        assert o[PARSE_OK_KEY] == r[PARSE_OK_KEY]
-        assert o["u"] == r["u"]
-    assert out[0]["u"] == "alice" and not out[1][PARSE_OK_KEY]
+    out = parse_regex(df, r"user=(\w+) x", ["u"]).orderBy("id").collect()
+    assert [r[PARSE_OK_KEY] for r in out] == [True, False, False]
+    assert [r["u"] for r in out] == ["alice", None, None]
 
 
-def test_dissect_rejects_anchor_in_capture_class(spark):
-    """Anchors whose first char the preceding capture could consume
-    make first-occurrence carving diverge from regex — compile_dissect
-    must bail to the regex engine."""
-    from ilogtail_spark.operators.parse import compile_dissect
+def test_regex_backtracks_into_capture_class(spark):
+    """An anchor whose first char the preceding capture can consume:
+    the match backtracks, and a match may start at a later occurrence
+    of the first anchor (regex ``find``, not first-occurrence carving)."""
+    df = _df(spark, ["a=x_y_b", "n=1277x", "tool=a tool=b status=1"])
+    out = parse_first_match(
+        df,
+        [(r"a=(\w+)_b", ["v"], {}), (r"n=(\d+)7x", ["v"], {}),
+         (r"tool=(\w+) status=(\d+)", ["v", "s"], {})],
+    ).orderBy("id").collect()
+    assert [r["v"] for r in out] == ["x_y", "127", "b"]
+    assert out[2]["s"] == "1" and all(r[PARSE_OK_KEY] for r in out)
 
-    assert compile_dissect(r"a=(\w+)_b") is None  # '_' ∈ \w
-    assert compile_dissect(r"n=(\d+)7x") is None  # '7' ∈ \d
-    assert compile_dissect(r"v=(\S+)!end") is None  # '!' ∈ \S
-    assert compile_dissect(r"v=(\S+) end") is not None  # ' ' ∉ \S
+
+def test_regex_duplicate_keys_last_participating_wins(spark):
+    """regex.go:121-127 appends only participating groups: among
+    duplicate Keys the last participating group wins, even when it
+    captured the empty string; a skipped branch does not count. A
+    single Key whose group did not take part reads ``""``."""
+    df = _df(spark, ["x=5;y=", "x=;y=7", "x=5", "y=", "q"])
+    out = parse_regex(
+        df, r"x=(\d*);y=(\d*)|x=(\d+)|y=(\d*)|(q)", ["v", "v", "v", "v", "w"]
+    ).orderBy("id").collect()
+    assert [r["v"] for r in out] == ["", "7", "5", "", ""]
+    assert [r["w"] for r in out] == ["", "", "", "", "q"]
+
+
+def test_regex_bad_pattern_fails_at_plan_build(spark):
+    """A pattern that does not compile raises a ValueError naming it
+    while the plan is built, before any Spark job runs."""
+    from ilogtail_spark.operators.registry import OPERATORS
+
+    df = _df(spark, ["a=1"])
+    fn = OPERATORS["processor_parse_regex_native"](Regex="a=(\\d+", Keys=["a"])
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    with pytest.raises(ValueError, match=r"invalid regex 'a=\("):
+        fn(df)
+    with pytest.raises(ValueError, match="Unclosed group"):
+        grok_parse(df, ["%{INT:a}", "b=(%{INT:b}"])
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
+
+
+def test_regex_fewer_groups_than_keys_fails_every_row(spark):
+    """Go fails every row when the pattern has fewer groups than Keys
+    (regex.go:115-120). The count is java.util.regex's own, so Java-only
+    syntax (a POSIX class, a possessive quantifier) is counted too."""
+    df = _df(spark, ["ab=12"])
+    for pat in (r"(\p{Alpha}++)=(\d+)", r"(\w+)=(\d+)"):
+        row = parse_regex(df, pat, ["k", "v", "extra"]).first()
+        assert row[PARSE_OK_KEY] is False and row[RAW_LOG_KEY] == "ab=12"
+        assert (row["k"], row["v"], row["extra"]) == (None, None, None)
+    assert parse_regex(df, r"(\p{Alpha}++)=(\d+)", ["k", "v"]).first()["k"] == "ab"
 
 
 # --- grok ---------------------------------------------------------------
@@ -301,6 +337,21 @@ def test_kv_factory_prefix_config_routes_full_splitter(spark):
     )
     out = fn(df).first()
     assert out["attrs"] == {"a": "1", "bad_0": "standalone"}
+
+
+def test_kv_factory_splits_on_the_literal_delimiter(spark):
+    """The registry always builds the full splitter: a regex
+    metacharacter Delimiter is literal, and a pair without the
+    separator lands under ``no_separator_key_<i>`` whether or not
+    Quote or a prefix key is configured."""
+    from ilogtail_spark.operators.registry import OPERATORS
+
+    df = _df(spark, ["a=1|standalone"])
+    for extra in ({}, {"Quote": '"'}):
+        fn = OPERATORS["processor_split_key_value"](
+            SourceKey="text", Delimiter="|", Separator="=", KeepSource=True, **extra
+        )
+        assert fn(df).first()["attrs"] == {"a": "1", "no_separator_key_0": "standalone"}
 
 
 def test_parse_delimiter_keep_overflow_raw_remainder(spark):

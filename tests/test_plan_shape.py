@@ -3,8 +3,8 @@
 These inspect `.explain` output rather than results: predicate
 pushdown reaches the parquet scan, the flagship pre-aggregation path
 is shuffle-free, enrichment is a literal-map lookup (no join), the
-CLI path scans no Python RDD, and the dissect parse path contains no
-java.util.regex expression.
+CLI path scans no Python RDD, and a regex parse is one JVM match per
+row.
 """
 
 import os
@@ -78,20 +78,41 @@ def test_cli_plans_scan_no_python_rdd(spark, sf_dir):
     assert empty.schema == table.schema and empty.count() == 0
 
 
-def test_dissect_path_has_no_jvm_regex(spark, sf_dir):
-    df = parse_stage(derive_transcripts(spark, sf_dir), engine="dissect")
-    plan = _plan(df)
-    for token in ("regexp_extract", "RLike", "rlike"):
-        assert token not in plan, f"java.util.regex op {token} in dissect plan"
+def test_regex_parse_calls_the_udf_once(spark, sf_dir):
+    """Every regex parse is one JVM match per row: the executed plan
+    calls the UDF exactly once, also under a filter on the parse flag
+    or on a parsed field (PushDownPredicates would copy a projected
+    call into each pushed predicate), and has no rlike or
+    regexp_extract."""
+    from ilogtail_spark.functions.grok import grok_parse
+    from ilogtail_spark.operators.parse import PARSE_OK_KEY, ParserOptions, parse_regex
+    from ilogtail_spark.plans.pipeline import flagship
+
+    scan = derive_transcripts(spark, sf_dir)
+    routed = flagship(scan)
+    plans = {
+        "flagship": routed,
+        "parse_ok": routed.filter(F.col(PARSE_OK_KEY)),
+        "status": routed.filter(F.col("status") == 200),
+        "discard": parse_regex(
+            scan, r"tool=(\w+)", ["t"], options=ParserOptions(discard_unmatch=True)
+        ),
+        "grok": grok_parse(scan, ["status=%{INT:s:int}", "tool=%{WORD:t}"], source="text"),
+    }
+    for name, df in plans.items():
+        plan = _formatted(df)
+        assert plan.count("ilogtail_regex_match(") == 1, (name, plan)
+        assert "rlike" not in plan.lower() and "regexp_extract" not in plan, (name, plan)
 
 
-def test_dissect_plan_stays_small_under_filter_pushdown(spark, sf_dir):
+def test_regex_plan_stays_small_under_filter_pushdown(spark, sf_dir):
     from ilogtail_spark.operators.parse import PARSE_OK_KEY
 
     df = parse_stage(derive_transcripts(spark, sf_dir)).filter(F.col(PARSE_OK_KEY))
     plan = _plan(df.groupBy("tool_call", "status").count())
-    # regression guard: the naive rest-chaining formulation exploded to
-    # a ~170 KB plan once filter pushdown substituted the chain
+    # regression guard: a parse whose expressions filter pushdown
+    # substitutes into the pushed predicate grows with every field it
+    # reads (a ~170 KB plan for an earlier formulation)
     assert len(plan) < 60_000, f"plan blew up to {len(plan)} chars"
 
 
